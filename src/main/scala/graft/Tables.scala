@@ -17,22 +17,28 @@ object Tables {
     * the footer round-trip; at 100 TB the same discipline is "declare
     * your schemas", which is also what the reference sink does.
     *
-    * Keyed by (path, mtime, length) so a file REGENERATED at the same
-    * path mid-JVM (the events.parquet ts layout has drifted across
-    * rounds) re-infers instead of silently serving the stale schema —
-    * one local stat() per construction, still far cheaper than a footer
+    * Keyed by path and stamped with the file's (mtime, length), so a
+    * file REGENERATED at the same path mid-JVM (the events.parquet ts
+    * layout has drifted across rounds) re-infers instead of silently
+    * serving the stale schema, and its new entry REPLACES the superseded
+    * one — one entry per path, however often a path is rewritten. One
+    * local stat() per construction, still far cheaper than a footer
     * read+parse. */
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[
-      (String, Long, Long), org.apache.spark.sql.types.StructType]()
+      String, ((Long, Long), org.apache.spark.sql.types.StructType)]()
 
   private def cachedSchema(
       spark: SparkSession, path: String): org.apache.spark.sql.types.StructType = {
     // test-table paths are plain local files/dirs by construction
     val f = new java.io.File(path)
-    schemaCache.computeIfAbsent((path, f.lastModified, f.length),
-      _ => spark.read.parquet(path).schema)
+    val stamp = (f.lastModified, f.length)
+    schemaCache.compute(path, (_, cached) =>
+      if (cached != null && cached._1 == stamp) cached
+      else (stamp, spark.read.parquet(path).schema))._2
   }
+
+  private[graft] def schemaCacheSize: Int = schemaCache.size
 
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"

@@ -432,8 +432,8 @@ object Dedup {
       n: Int, threshold: Double, probeIds: Option[DataFrame]): DataFrame = {
     // materialized once — the gram arrays feed three plan branches
     // (posting list, verify-side A, verify-side B); without caching the
-    // tokenize+ngram pipeline would be recomputed per branch (measured 3×
-    // the whole query's cost via tools/NgramProfile). Arrays kept SORTED so
+    // tokenize+ngram pipeline would be recomputed per branch (measured at
+    // 3× the whole query's cost). Arrays kept SORTED so
     // verification can use the O(n+m) merge-count expression.
     val grams = df
       .select(col(idCol).as("doc_id"), wordNgrams(col(textCol), n).as("g"))

@@ -464,7 +464,7 @@ object Relational {
     val m = spark.read.parquet(s"$live/meta").head()
     val (groupCol, valueCol, gamma) =
       (m.getString(0), m.getString(1), m.getDouble(2))
-    // seen-tag + legacy-upgrade + replay-match rules shared with the
+    // seen-tag + replay-match rules shared with the
     // heavy-hitter state lane (GenerationState)
     val seen = graft.sink.GenerationState.seenTags(spark, live)
     val tag = batchId.map(id => (id, graft.streaming.ReplayGuard.fingerprint(

@@ -155,7 +155,7 @@ object TextAnalysis {
     // ONE generation resolution for the whole append (the liveIndexRoot
     // discipline) — all reads below come from the same immutable tree
     val live = liveHhRoot(spark, path)
-    // seen-tag + legacy-upgrade + replay-match rules live in ONE place
+    // seen-tag + replay-match rules live in ONE place
     // (GenerationState) shared with the quantile state lane
     val seen = graft.sink.GenerationState.seenTags(spark, live)
     val tag = batchId.map(id =>

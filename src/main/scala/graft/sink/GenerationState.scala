@@ -14,17 +14,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  *
  * One home for the replay-guard contract: the id+fingerprint match (a
  * fresh checkpoint lineage re-issues ids from 0, so id-only dedup would
- * drop real data — [[graft.streaming.ReplayGuard]]) and the
- * pre-fingerprint upgrade path (legacy `seen/` rows recorded id-only;
- * they match ANY fingerprint, so an upgraded reader never crashes or
- * double-counts). Keeping both rules here means every state lane
- * hardens together instead of drifting copy by copy.
+ * drop real data — [[graft.streaming.ReplayGuard]]). Keeping the rule
+ * here means every state lane hardens together instead of drifting copy
+ * by copy.
  */
 private[graft] object GenerationState {
-
-  /** Sentinel for `seen/` rows recorded before content fingerprints
-    * existed: their content is unknowable, so they match any fp. */
-  val LegacyFp: Long = Long.MinValue
 
   /** The `seen/` ledger keeps only this many newest tags: a re-delivered
     * foreachBatch can only be the most recent uncommitted batch (the
@@ -78,27 +72,17 @@ private[graft] object GenerationState {
   }
 
   /** The live generation's replay tags in APPEND ORDER — restored from
-    * the persisted `pos` column where present (a multi-split read may
-    * scramble row order; `takeRight` truncation must see newest-last), by
-    * read order for older single-split ledgers. Pre-fingerprint id-only
-    * rows upgrade to [[LegacyFp]] match-any sentinels. */
-  def seenTags(spark: SparkSession, liveRoot: String): Seq[(Long, Long)] = {
-    val seenDf = spark.read.parquet(s"$liveRoot/seen")
-    val rows =
-      if (seenDf.columns.contains("pos"))
-        seenDf.select("batch_id", "fp", "pos").collect()
-          .sortBy(_.getLong(2)).toSeq
-      else seenDf.collect().toSeq
-    if (seenDf.columns.contains("fp"))
-      rows.map(r => (r.getLong(0), r.getLong(1)))
-    else rows.map(r => (r.getLong(0), LegacyFp))
-  }
+    * the persisted `pos` column (a multi-split read may scramble row
+    * order; `takeRight` truncation must see newest-last). */
+  def seenTags(spark: SparkSession, liveRoot: String): Seq[(Long, Long)] =
+    spark.read.parquet(s"$liveRoot/seen")
+      .select("batch_id", "fp", "pos").collect()
+      .sortBy(_.getLong(2)).toSeq
+      .map(r => (r.getLong(0), r.getLong(1)))
 
   /** Whether this batch tag was already folded into the state — the
-    * exactly-once check (legacy id-only rows match any fingerprint). */
+    * exactly-once check. */
   def isReplay(
       seen: Seq[(Long, Long)], tag: Option[(Long, Long)]): Boolean =
-    tag.exists { case (id, fp) =>
-      seen.exists(s => s._1 == id && (s._2 == fp || s._2 == LegacyFp))
-    }
+    tag.exists(seen.contains)
 }

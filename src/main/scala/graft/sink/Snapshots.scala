@@ -49,13 +49,17 @@ import org.apache.spark.sql.types._
  *   MANIFEST                                  current snapshot name, e.g. "s3"
  * }}}
  *
- * Manifest format (v2, `graftsnap=2` header): `key=value` lines —
+ * Manifest format 3 (`graftsnap=3` header): `key=value` lines —
  * `mode`, `schema` (Spark StructType JSON — the dataset's recorded read
  * contract), `format` (parquet/orc/avro — fixed at dataset creation),
- * `codec`, `statscols`, `batch` (stream replay tag), `parent` (delta
+ * `ts` (publish instant), `partitionby`, `codec`, `statscols`, `batch`
+ * (stream replay tag, always also in `rtags`), `parent` (delta
  * chaining), then `add=`/`remove=` lines (delta) or `file=` lines
- * (full). File lines carry optional per-column min/max stats after a
- * tab. v1 manifests (positional: mode, schema, bare paths) still parse.
+ * (full). File lines carry their `seq` and `bytes`, then optional row
+ * and null counts and per-column min/max stats, tab-separated. This is
+ * the only format the engine reads: a manifest with any other header
+ * fails with a version error, and one missing a required line is
+ * reported as corrupt ([[parseManifest]]).
  *
  * Writes are gated by [[graft.schema.SchemaEvolution]] against the
  * recorded schema — safe widening updates the contract, breakage fails
@@ -89,8 +93,9 @@ object Snapshots {
     * `nullness = Some(true)` selects rows where the column IS NULL
     * (bounds must be empty — null matches no range): files whose recorded
     * null count is 0 are skipped. `Some(false)` (IS NOT NULL) skips files
-    * whose every row is null for the column. Both degrade conservatively
-    * when counts weren't recorded (pre-counting manifests).
+    * whose every row is null for the column. Both keep the file when the
+    * column has no recorded null count (it is not a declared stats
+    * column).
     *
     * `anyOf = Some(vs)` is a DISJUNCTIVE equality set — `column IN (vs)`,
     * the batched point-lookup shape: a file survives when ANY value can
@@ -176,22 +181,21 @@ object Snapshots {
     * at — the merge-on-read sequencing token: an equality-delete file
     * suppresses only rows in data files with a STRICTLY OLDER seq, so a
     * merge batch's own upserts (same snapshot) and any later re-insert of
-    * a deleted key are never suppressed. Entries that predate seq
-    * recording carry 0 (every delete applies — correct: deletes are
-    * always newer than a pre-MoR file). */
+    * a deleted key are never suppressed. `bytes` is the file's length. */
   /** `rows` is the file's row count, `nulls` its per-stat-column null
     * counts — both recorded at write from the same staging pass that
     * computes min/max, so `count(*)`-shaped reads ([[snapshotLog]]) and
     * `IS [NOT] NULL` pruning answer from metadata instead of scanning
-    * footers. -1 / absent = unrecorded (pre-counting manifests) —
+    * footers. A dataset that declares no stats or bloom columns runs no
+    * such pass: its files record `rows = -1` and no null counts, and
     * consumers degrade conservatively. */
   /** `bloomRef` names the batch sidecar (under `blooms/`) holding this
     * file's per-bloom-column filters — absent when the dataset declares
     * no bloomColumns or the file predates them. */
   private case class FileEntry(
       rel: String, stats: Map[String, (Option[String], Option[String])],
-      seq: Int = 0, rows: Long = -1L, nulls: Map[String, Long] = Map.empty,
-      bytes: Long = -1L, bloomRef: Option[String] = None)
+      seq: Int, rows: Long, nulls: Map[String, Long],
+      bytes: Long, bloomRef: Option[String])
 
   /** One live EQUALITY-DELETE file (merge-on-read): rows of `keyCols`
     * values whose matching data rows are suppressed at read in every data
@@ -202,7 +206,7 @@ object Snapshots {
   private case class DeleteEntry(
       rel: String, seq: Int, keyCols: Seq[String],
       stats: Map[String, (Option[String], Option[String])],
-      bytes: Long = -1L)
+      bytes: Long)
 
   /** Dataset-level write metadata recorded in every manifest. */
   /** `ts` is the wall-clock publish instant (epoch millis) — recorded in
@@ -224,7 +228,7 @@ object Snapshots {
   private case class SnapMeta(
       mode: String, schema: StructType, format: String,
       codec: Option[String], statsCols: Seq[String], batchTag: Option[String],
-      partitionCols: Seq[String], ts: Option[Long] = None,
+      partitionCols: Seq[String], ts: Long,
       recentTags: Seq[String] = Seq.empty,
       bloomCols: Seq[String] = Seq.empty,
       constraints: Seq[(String, String)] = Seq.empty,
@@ -235,34 +239,29 @@ object Snapshots {
     * same shapes (`dfile=` in full manifests, `dadd=`/`dremove=` in
     * deltas). */
   private case class RawManifest(
-      id: Int, mode: String, schema: Option[StructType], format: String,
+      id: Int, mode: String, schema: StructType, format: String,
       codec: Option[String], statsCols: Seq[String], batchTag: Option[String],
       partitionCols: Seq[String], parent: Option[Int], adds: Seq[FileEntry],
       removes: Seq[String], full: Option[Seq[FileEntry]],
       dAdds: Seq[DeleteEntry], dRemoves: Seq[String],
-      dFull: Option[Seq[DeleteEntry]], ts: Option[Long],
-      recentTags: Seq[String] = Seq.empty,
-      bloomCols: Seq[String] = Seq.empty,
-      constraints: Seq[(String, String)] = Seq.empty,
-      renames: Seq[(Int, String, String)] = Seq.empty) {
-    /** The rolling replay-tag window this manifest represents: manifests
-      * predating `rtags=` recording carry only their own tag. */
-    def effectiveRecentTags: Seq[String] =
-      if (recentTags.nonEmpty) recentTags else batchTag.toSeq
-  }
+      dFull: Option[Seq[DeleteEntry]], ts: Long,
+      recentTags: Seq[String],
+      bloomCols: Seq[String],
+      constraints: Seq[(String, String)],
+      renames: Seq[(Int, String, String)])
 
   /** A snapshot with its delta chain applied: the complete live file set
     * (plus live equality-delete files) and the requested manifest's
     * metadata. */
   private case class Resolved(
-      id: Int, mode: String, schema: Option[StructType], format: String,
+      id: Int, mode: String, schema: StructType, format: String,
       codec: Option[String], statsCols: Seq[String], batchTag: Option[String],
       partitionCols: Seq[String], files: Seq[FileEntry],
-      deletes: Seq[DeleteEntry], chainDepth: Int, ts: Option[Long],
-      recentTags: Seq[String] = Seq.empty,
-      bloomCols: Seq[String] = Seq.empty,
-      constraints: Seq[(String, String)] = Seq.empty,
-      renames: Seq[(Int, String, String)] = Seq.empty)
+      deletes: Seq[DeleteEntry], chainDepth: Int, ts: Long,
+      recentTags: Seq[String],
+      bloomCols: Seq[String],
+      constraints: Seq[(String, String)],
+      renames: Seq[(Int, String, String)])
 
   /** Quoted resolution of a LITERAL column name: this surface admits
     * field names containing dots (the sink's qcol discipline), and bare
@@ -305,9 +304,9 @@ object Snapshots {
 
   private def encodeEntry(e: FileEntry): String = {
     val b = new StringBuilder(e.rel)
-    if (e.seq > 0) b ++= s"\tseq=${e.seq}"
+    b ++= s"\tseq=${e.seq}"
     if (e.rows >= 0) b ++= s"\trows=${e.rows}"
-    if (e.bytes >= 0) b ++= s"\tbytes=${e.bytes}"
+    b ++= s"\tbytes=${e.bytes}"
     e.bloomRef.foreach(r => b ++= s"\tbloom=${enc(r)}")
     if (e.nulls.nonEmpty) {
       b ++= "\tnulls="
@@ -318,21 +317,29 @@ object Snapshots {
     b.result()
   }
 
+  /** The manifest format this engine writes and the only one it reads. */
+  private val FormatVersion = 3
+  private val FormatHeader = s"graftsnap=$FormatVersion"
+
+  private def corruptManifest(source: String, what: String): Nothing =
+    throw new IllegalStateException(
+      s"corrupt snapshot manifest $source: $what")
+
   // a stats blob always contains "=lo,hi" (comma included), so a bare
   // `seq=<digits>` / `rows=<digits>` field is unambiguous against a stat
   // column named "seq" or "rows"
-  private def decodeEntry(s: String): FileEntry = {
+  private def decodeEntry(source: String, s: String): FileEntry = {
     val fields = s.split("\t")
-    var seq = 0
+    var seq: Option[Int] = None
     var rows = -1L
-    var bytes = -1L
+    var bytes: Option[Long] = None
     var bloomRef: Option[String] = None
     var nulls = Map.empty[String, Long]
     var stats = Map.empty[String, (Option[String], Option[String])]
     fields.tail.foreach {
-      case SeqField(n) => seq = n.toInt
+      case SeqField(n) => seq = Some(n.toInt)
       case RowsField(n) => rows = n.toLong
-      case BytesField(n) => bytes = n.toLong
+      case BytesField(n) => bytes = Some(n.toLong)
       case BloomField(r) => bloomRef = Some(dec(r))
       case NullsField(payload) =>
         nulls = Option(payload).toSeq.flatMap(_.split(","))
@@ -342,33 +349,42 @@ object Snapshots {
           }.toMap
       case blob => stats = decodeStats(blob)
     }
-    FileEntry(fields.head, stats, seq, rows, nulls, bytes, bloomRef)
+    FileEntry(fields.head, stats,
+      seq.getOrElse(corruptManifest(source, s"file ${fields.head} lacks seq=")),
+      rows, nulls,
+      bytes.getOrElse(corruptManifest(source, s"file ${fields.head} lacks bytes=")),
+      bloomRef)
   }
 
   private def encodeDelete(d: DeleteEntry): String = {
     val b = new StringBuilder(d.rel)
     b ++= s"\tseq=${d.seq}"
-    if (d.bytes >= 0) b ++= s"\tbytes=${d.bytes}"
+    b ++= s"\tbytes=${d.bytes}"
     b ++= s"\tkeys=${d.keyCols.map(enc).mkString(",")}"
     if (d.stats.nonEmpty) { b += '\t'; b ++= encodeStats(d.stats) }
     b.result()
   }
 
-  private def decodeDelete(s: String): DeleteEntry = {
+  private def decodeDelete(source: String, s: String): DeleteEntry = {
     val fields = s.split("\t")
-    var seq = 0
-    var bytes = -1L
+    var seq: Option[Int] = None
+    var bytes: Option[Long] = None
     var keyCols = Seq.empty[String]
     var stats = Map.empty[String, (Option[String], Option[String])]
     fields.tail.foreach {
-      case SeqField(n) => seq = n.toInt
-      case BytesField(n) => bytes = n.toLong
+      case SeqField(n) => seq = Some(n.toInt)
+      case BytesField(n) => bytes = Some(n.toLong)
       case kf if kf.startsWith("keys=") =>
         keyCols = kf.stripPrefix("keys=").split(",").toSeq
           .filter(_.nonEmpty).map(dec)
       case blob => stats = decodeStats(blob)
     }
-    DeleteEntry(fields.head, seq, keyCols, stats, bytes)
+    DeleteEntry(fields.head,
+      seq.getOrElse(corruptManifest(source,
+        s"delete file ${fields.head} lacks seq=")),
+      keyCols, stats,
+      bytes.getOrElse(corruptManifest(source,
+        s"delete file ${fields.head} lacks bytes=")))
   }
 
   private def renderManifest(
@@ -378,7 +394,7 @@ object Snapshots {
       dRemoves: Seq[String] = Seq.empty,
       dFull: Seq[DeleteEntry] = Seq.empty): String = {
     val b = new StringBuilder
-    b ++= "graftsnap=2\n"
+    b ++= s"$FormatHeader\n"
     b ++= s"mode=${meta.mode}\n"
     b ++= s"schema=${meta.schema.json}\n"
     b ++= s"format=${meta.format}\n"
@@ -397,12 +413,11 @@ object Snapshots {
     meta.renames.foreach { case (id, from, to) =>
       b ++= s"rename=$id=${enc(from)}=${enc(to)}\n"
     }
-    if (meta.partitionCols.nonEmpty)
-      b ++= s"partitionby=${meta.partitionCols.map(enc).mkString(",")}\n"
+    b ++= s"partitionby=${meta.partitionCols.map(enc).mkString(",")}\n"
     meta.batchTag.foreach(t => b ++= s"batch=${enc(t)}\n")
     if (meta.recentTags.nonEmpty)
       b ++= s"rtags=${meta.recentTags.map(enc).mkString(",")}\n"
-    meta.ts.foreach(t => b ++= s"ts=$t\n")
+    b ++= s"ts=${meta.ts}\n"
     parent.foreach(p => b ++= s"parent=$p\n")
     full match {
       case Some(files) =>
@@ -420,102 +435,115 @@ object Snapshots {
   private def parseSchema(json: String): StructType =
     DataType.fromJson(json).asInstanceOf[StructType]
 
-  private def parseManifest(id: Int, text: String): RawManifest = {
+  /** Parse manifest `s<id>` read from `source`. The one place that knows
+    * the on-disk format: another `graftsnap=` version, or format 1's
+    * headerless `mode=` opening, fails with a version error; any other
+    * headerless text, and a format-3 manifest missing a required line
+    * (`mode`, `schema`, `format`, `ts`, `partitionby`; per-file `seq` and
+    * `bytes`; `rtags` holding the `batch` tag), is reported as corrupt. */
+  private def parseManifest(id: Int, text: String, source: String): RawManifest = {
     val lines = text.split("\n").toSeq.map(_.stripSuffix("\r")).filter(_.nonEmpty)
-    if (lines.headOption.contains("graftsnap=2")) {
-      var mode = ""; var schema: Option[StructType] = None
-      var format = "parquet"; var codec: Option[String] = None
-      var statsCols: Seq[String] = Seq.empty
-      var bloomCols: Seq[String] = Seq.empty
-      var partitionCols: Seq[String] = Seq.empty
-      var batchTag: Option[String] = None; var parent: Option[Int] = None
-      var ts: Option[Long] = None
-      var recentTags: Seq[String] = Seq.empty
-      val constraints = Seq.newBuilder[(String, String)]
-      val renames = Seq.newBuilder[(Int, String, String)]
-      val adds = Seq.newBuilder[FileEntry]
-      val removes = Seq.newBuilder[String]
-      val fulls = Seq.newBuilder[FileEntry]
-      val dAdds = Seq.newBuilder[DeleteEntry]
-      val dRemoves = Seq.newBuilder[String]
-      val dFulls = Seq.newBuilder[DeleteEntry]
-      lines.tail.foreach {
-        case l if l.startsWith("mode=") => mode = l.stripPrefix("mode=")
-        case l if l.startsWith("schema=") =>
-          schema = Some(parseSchema(l.stripPrefix("schema=")))
-        case l if l.startsWith("format=") => format = l.stripPrefix("format=")
-        case l if l.startsWith("codec=") =>
-          codec = Some(l.stripPrefix("codec="))
-        case l if l.startsWith("statscols=") =>
-          statsCols = l.stripPrefix("statscols=").split(",").toSeq
-            .filter(_.nonEmpty).map(dec)
-        case l if l.startsWith("bloomcols=") =>
-          bloomCols = l.stripPrefix("bloomcols=").split(",").toSeq
-            .filter(_.nonEmpty).map(dec)
-        case l if l.startsWith("partitionby=") =>
-          partitionCols = l.stripPrefix("partitionby=").split(",").toSeq
-            .filter(_.nonEmpty).map(dec)
-        case l if l.startsWith("batch=") =>
-          batchTag = Some(dec(l.stripPrefix("batch=")))
-        case l if l.startsWith("rtags=") =>
-          recentTags = l.stripPrefix("rtags=").split(",").toSeq
-            .filter(_.nonEmpty).map(dec)
-        case l if l.startsWith("constraint=") =>
-          // URL-encoding escapes '=' inside name/expr, so the FIRST '='
-          // of the payload is always the separator
-          val payload = l.stripPrefix("constraint=")
-          val sep = payload.indexOf('=')
-          require(sep > 0, s"corrupt constraint line in s$id: '$l'")
-          constraints += ((dec(payload.substring(0, sep)),
-            dec(payload.substring(sep + 1))))
-        case l if l.startsWith("rename=") =>
-          // URL-encoding escapes '=' inside names, so the first two '='
-          // of the payload are always the separators
-          val payload = l.stripPrefix("rename=")
-          val s1 = payload.indexOf('=')
-          val s2 = payload.indexOf('=', s1 + 1)
-          require(s1 > 0 && s2 > s1, s"corrupt rename line in s$id: '$l'")
-          renames += ((payload.substring(0, s1).toInt,
-            dec(payload.substring(s1 + 1, s2)),
-            dec(payload.substring(s2 + 1))))
-        case l if l.startsWith("ts=") =>
-          ts = Some(l.stripPrefix("ts=").toLong)
-        case l if l.startsWith("parent=") =>
-          parent = Some(l.stripPrefix("parent=").toInt)
-        case l if l.startsWith("remove=") =>
-          removes += l.stripPrefix("remove=")
-        case l if l.startsWith("add=") =>
-          adds += decodeEntry(l.stripPrefix("add="))
-        case l if l.startsWith("file=") =>
-          fulls += decodeEntry(l.stripPrefix("file="))
-        case l if l.startsWith("dremove=") =>
-          dRemoves += l.stripPrefix("dremove=")
-        case l if l.startsWith("dadd=") =>
-          dAdds += decodeDelete(l.stripPrefix("dadd="))
-        case l if l.startsWith("dfile=") =>
-          dFulls += decodeDelete(l.stripPrefix("dfile="))
-        case other => throw new IllegalStateException(
-          s"corrupt snapshot manifest s$id: unrecognized line '${other.take(80)}'")
+    if (!lines.headOption.contains(FormatHeader)) {
+      // format 1 had no header and opened with its `mode=` line; any
+      // other headerless text is damage, not an older format
+      val found = lines.headOption match {
+        case Some(h) if h.startsWith("graftsnap=") => h.stripPrefix("graftsnap=")
+        case Some(h) if h.startsWith("mode=") => "1 (no graftsnap header)"
+        case _ => corruptManifest(source, "no graftsnap header")
       }
-      RawManifest(id, mode, schema, format, codec, statsCols, batchTag,
-        partitionCols, parent, adds.result(), removes.result(),
-        if (parent.isEmpty) Some(fulls.result()) else None,
-        dAdds.result(), dRemoves.result(),
-        if (parent.isEmpty) Some(dFulls.result()) else None, ts, recentTags,
-        bloomCols, constraints.result(), renames.result())
-    } else {
-      // v1 (positional): mode line, optional schema line, bare file paths
-      val mode = lines.head.stripPrefix("mode=")
-      val (schema, files) = lines.tail match {
-        case s +: rest if s.startsWith("schema=") =>
-          (Some(parseSchema(s.stripPrefix("schema="))), rest)
-        case rest => (None, rest)
-      }
-      RawManifest(id, mode, schema, "parquet", None, Seq.empty, None,
-        Seq.empty, None, Seq.empty, Seq.empty,
-        Some(files.map(FileEntry(_, Map.empty))),
-        Seq.empty, Seq.empty, Some(Seq.empty), None)
+      throw new IllegalStateException(
+        s"snapshot manifest $source is format $found; this engine reads " +
+          s"only format $FormatVersion ($FormatHeader) — rewrite the " +
+          "dataset with this engine (read it with the engine that wrote " +
+          "it, write it back here)")
     }
+    var mode: Option[String] = None; var schema: Option[StructType] = None
+    var format: Option[String] = None; var codec: Option[String] = None
+    var statsCols: Seq[String] = Seq.empty
+    var bloomCols: Seq[String] = Seq.empty
+    var partitionCols: Option[Seq[String]] = None
+    var batchTag: Option[String] = None; var parent: Option[Int] = None
+    var ts: Option[Long] = None
+    var recentTags: Seq[String] = Seq.empty
+    val constraints = Seq.newBuilder[(String, String)]
+    val renames = Seq.newBuilder[(Int, String, String)]
+    val adds = Seq.newBuilder[FileEntry]
+    val removes = Seq.newBuilder[String]
+    val fulls = Seq.newBuilder[FileEntry]
+    val dAdds = Seq.newBuilder[DeleteEntry]
+    val dRemoves = Seq.newBuilder[String]
+    val dFulls = Seq.newBuilder[DeleteEntry]
+    lines.tail.foreach {
+      case l if l.startsWith("mode=") => mode = Some(l.stripPrefix("mode="))
+      case l if l.startsWith("schema=") =>
+        schema = Some(parseSchema(l.stripPrefix("schema=")))
+      case l if l.startsWith("format=") =>
+        format = Some(l.stripPrefix("format="))
+      case l if l.startsWith("codec=") =>
+        codec = Some(l.stripPrefix("codec="))
+      case l if l.startsWith("statscols=") =>
+        statsCols = l.stripPrefix("statscols=").split(",").toSeq
+          .filter(_.nonEmpty).map(dec)
+      case l if l.startsWith("bloomcols=") =>
+        bloomCols = l.stripPrefix("bloomcols=").split(",").toSeq
+          .filter(_.nonEmpty).map(dec)
+      case l if l.startsWith("partitionby=") =>
+        partitionCols = Some(l.stripPrefix("partitionby=").split(",").toSeq
+          .filter(_.nonEmpty).map(dec))
+      case l if l.startsWith("batch=") =>
+        batchTag = Some(dec(l.stripPrefix("batch=")))
+      case l if l.startsWith("rtags=") =>
+        recentTags = l.stripPrefix("rtags=").split(",").toSeq
+          .filter(_.nonEmpty).map(dec)
+      case l if l.startsWith("constraint=") =>
+        // URL-encoding escapes '=' inside name/expr, so the FIRST '='
+        // of the payload is always the separator
+        val payload = l.stripPrefix("constraint=")
+        val sep = payload.indexOf('=')
+        require(sep > 0, s"corrupt constraint line in s$id: '$l'")
+        constraints += ((dec(payload.substring(0, sep)),
+          dec(payload.substring(sep + 1))))
+      case l if l.startsWith("rename=") =>
+        // URL-encoding escapes '=' inside names, so the first two '='
+        // of the payload are always the separators
+        val payload = l.stripPrefix("rename=")
+        val s1 = payload.indexOf('=')
+        val s2 = payload.indexOf('=', s1 + 1)
+        require(s1 > 0 && s2 > s1, s"corrupt rename line in s$id: '$l'")
+        renames += ((payload.substring(0, s1).toInt,
+          dec(payload.substring(s1 + 1, s2)),
+          dec(payload.substring(s2 + 1))))
+      case l if l.startsWith("ts=") =>
+        ts = Some(l.stripPrefix("ts=").toLong)
+      case l if l.startsWith("parent=") =>
+        parent = Some(l.stripPrefix("parent=").toInt)
+      case l if l.startsWith("remove=") =>
+        removes += l.stripPrefix("remove=")
+      case l if l.startsWith("add=") =>
+        adds += decodeEntry(source, l.stripPrefix("add="))
+      case l if l.startsWith("file=") =>
+        fulls += decodeEntry(source, l.stripPrefix("file="))
+      case l if l.startsWith("dremove=") =>
+        dRemoves += l.stripPrefix("dremove=")
+      case l if l.startsWith("dadd=") =>
+        dAdds += decodeDelete(source, l.stripPrefix("dadd="))
+      case l if l.startsWith("dfile=") =>
+        dFulls += decodeDelete(source, l.stripPrefix("dfile="))
+      case other => corruptManifest(source,
+        s"unrecognized line '${other.take(80)}'")
+    }
+    def required[T](v: Option[T], key: String): T =
+      v.getOrElse(corruptManifest(source, s"missing $key= line"))
+    batchTag.filterNot(recentTags.contains).foreach(t =>
+      corruptManifest(source, s"batch tag '$t' is missing from rtags="))
+    RawManifest(id, required(mode, "mode"), required(schema, "schema"),
+      required(format, "format"), codec, statsCols, batchTag,
+      required(partitionCols, "partitionby"), parent, adds.result(),
+      removes.result(), if (parent.isEmpty) Some(fulls.result()) else None,
+      dAdds.result(), dRemoves.result(),
+      if (parent.isEmpty) Some(dFulls.result()) else None,
+      required(ts, "ts"), recentTags, bloomCols, constraints.result(),
+      renames.result())
   }
 
   /** Read manifest `s<id>` from an explicit manifests directory — the
@@ -534,7 +562,7 @@ object Snapshots {
     val text =
       try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
       finally in.close()
-    parseManifest(id, text)
+    parseManifest(id, text, p.toString)
   }
 
   private def readSnapshotFile(
@@ -592,7 +620,7 @@ object Snapshots {
     }
     Resolved(top.id, top.mode, top.schema, top.format, top.codec,
       top.statsCols, top.batchTag, top.partitionCols, files.values.toSeq,
-      dels.values.toSeq, chain.length - 1, top.ts, top.effectiveRecentTags,
+      dels.values.toSeq, chain.length - 1, top.ts, top.recentTags,
       top.bloomCols, top.constraints, top.renames)
   }
 
@@ -649,11 +677,9 @@ object Snapshots {
     * [[SinkFormat.name]]). */
   private def reader(
       spark: SparkSession, formatTok: String, base: String,
-      schema: Option[StructType]): org.apache.spark.sql.DataFrameReader = {
-    val r0 = spark.read.format(sinkFormatOf(formatTok).name)
-      .option("basePath", base)
-    schema.fold(r0)(r0.schema)
-  }
+      schema: StructType): org.apache.spark.sql.DataFrameReader =
+    spark.read.format(sinkFormatOf(formatTok).name)
+      .option("basePath", base).schema(schema)
 
   // -------------------------------------------------------------- stats
 
@@ -851,7 +877,7 @@ object Snapshots {
       r.nullness.isEmpty &&
       (r.anyOf.exists(_.nonEmpty) || (r.lower.isDefined && r.lower == r.upper)))
     if (eqs.isEmpty) return entries
-    val schema = m.schema.getOrElse(return entries)
+    val schema = m.schema
     val refs = entries.flatMap(_.bloomRef).distinct
     if (refs.isEmpty) return entries
     // each bound as the INTERNAL value under the column's recorded type —
@@ -969,25 +995,22 @@ object Snapshots {
     // load with their physical schema and alias back to the contract —
     // the spec-era grouping's twin; a rename-free dataset (or one whose
     // files all postdate every rename) stays one scan and pays nothing
-    def mapping(seq: Int): Seq[String] = m.schema match {
-      case Some(sc) if m.renames.nonEmpty =>
-        sc.fieldNames.toSeq.map(c => physicalName(m.renames, c, seq))
-      case _ => Seq.empty
-    }
+    def mapping(seq: Int): Seq[String] =
+      if (m.renames.isEmpty) Seq.empty
+      else m.schema.fieldNames.toSeq.map(c => physicalName(m.renames, c, seq))
     entries.groupBy(e => (sigOf(e.rel), mapping(e.seq))).toSeq
       .sortBy { case ((sig, phys), _) =>
         (sig.mkString(","), phys.mkString(","))
       }
       .map { case ((_, phys), es) =>
         val paths = es.map(e => s"$base/${e.rel}")
-        val sc = m.schema
-        if (phys.isEmpty || sc.exists(_.fieldNames.toSeq == phys))
-          reader(spark, m.format, base, sc).load(paths: _*)
+        val contract = m.schema
+        if (phys.isEmpty || contract.fieldNames.toSeq == phys)
+          reader(spark, m.format, base, contract).load(paths: _*)
         else {
-          val contract = sc.get
           val physSchema = StructType(contract.fields.toSeq.zip(phys)
             .map { case (fd, pn) => fd.copy(name = pn) })
-          reader(spark, m.format, base, Some(physSchema)).load(paths: _*)
+          reader(spark, m.format, base, physSchema).load(paths: _*)
             .select(contract.fields.toSeq.zip(phys).map {
               case (fd, pn) => qc(pn).as(fd.name)
             }: _*)
@@ -1002,7 +1025,7 @@ object Snapshots {
     def load(entries: Seq[FileEntry]): DataFrame =
       scanRaw(spark, qroot, m, entries)
     if (m.deletes.isEmpty) return load(kept)
-    val schema = m.schema.getOrElse(StructType(Seq.empty))
+    val schema = m.schema
     val keyCols = m.deletes.head.keyCols
     require(m.deletes.forall(_.keyCols == keyCols),
       "live equality-delete files disagree on key columns — corrupt state")
@@ -1017,12 +1040,8 @@ object Snapshots {
     // is dropped and the join shuffles; correctness is identical.
     val limit = spark.conf.getOption("graft.snapshots.broadcastDeleteBytes")
       .map(_.toLong).getOrElse(64L << 20)
-    // sizes come from the manifest when recorded (zero RPCs on the read
-    // path); only pre-recording entries fall back to the filesystem
-    lazy val fs = qroot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val delSize = m.deletes.map(d => d.rel ->
-      (if (d.bytes >= 0) d.bytes
-       else fs.getFileStatus(new Path(delBase, d.rel)).getLen)).toMap
+    // sizes come from the manifest (zero RPCs on the read path)
+    val delSize = m.deletes.map(d => d.rel -> d.bytes).toMap
     val classes = kept.groupBy(e =>
       m.deletes.filter(deleteApplies(_, e, schema)).map(_.rel).sorted)
     classes.toSeq.sortBy(_._1.mkString(","))
@@ -1130,7 +1149,7 @@ object Snapshots {
     // case-variant contract field no later reader could resolve
     // unambiguously, and the constraint null-fill would add a duplicate
     // sibling that dies AMBIGUOUS_REFERENCE instead of judging the value.
-    val df = prev.flatMap(_.schema) match {
+    val df = prev.map(_.schema) match {
       case Some(stored) =>
         val resolver = spark.sessionState.conf.resolver
         val renames = batch.columns.flatMap { c =>
@@ -1149,8 +1168,7 @@ object Snapshots {
     // manifest), not just the head's own tag — a maintain() publish
     // (compact/fold/expire) landing between a crashed batch attempt and
     // its redelivery must not reopen the double-append hole
-    if (batchTag.isDefined && prev.exists(p =>
-        p.batchTag == batchTag || p.recentTags.contains(batchTag.get)))
+    if (batchTag.exists(t => prev.exists(_.recentTags.contains(t))))
       return cur.get
     // dataset-fixed properties: first write declares, later writes inherit
     val fmtTok = prev match {
@@ -1192,9 +1210,8 @@ object Snapshots {
     // different spec would route files into a second directory layout the
     // manifest can't distinguish — so every write targets the CURRENT
     // spec, and changing it is an explicit metadata operation
-    // ([[evolvePartitioning]]). Legacy manifests predate the recorded
-    // spec; the first v2 write pins it.
-    prev.map(_.partitionCols).filter(_.nonEmpty).foreach { stored =>
+    // ([[evolvePartitioning]])
+    prev.map(_.partitionCols).foreach { stored =>
       require(partitionFields == stored,
         s"dataset at $root is partitioned by ${stored.mkString(",")}; " +
           s"cannot write under ${partitionFields.mkString(",")} " +
@@ -1216,11 +1233,9 @@ object Snapshots {
     // contract loudly with nothing written, or the recorded schema
     // becomes the (possibly widened) merge — so every reader resolves a
     // single authoritative schema instead of per-file footer inference
-    val contract = prev.flatMap(_.schema) match {
-      case Some(stored) => graft.schema.SchemaEvolution.validate(
-        stored, df.schema, partitionFields, evolution)
-      case None => df.schema
-    }
+    val contract = prev.fold(df.schema)(p =>
+      graft.schema.SchemaEvolution.validate(
+        p.schema, df.schema, partitionFields, evolution))
     // a widening batch must not RE-INTRODUCE a name the rename ledger
     // RESERVES: old files still physically hold `from` names (the "new"
     // column would resurrect their bytes on read), and a `to` name
@@ -1232,8 +1247,7 @@ object Snapshots {
       val resolver = spark.sessionState.conf.resolver
       val reserved = (ledger.map(_._2) ++ ledger.map(_._3))
         .filter(_.nonEmpty).distinct
-      val stored = prev.flatMap(_.schema).map(_.fieldNames.toSeq)
-        .getOrElse(Seq.empty)
+      val stored = prev.toSeq.flatMap(_.schema.fieldNames)
       contract.fieldNames.filterNot(c => stored.exists(resolver(_, c)))
         .find(c => reserved.exists(resolver(_, c))).foreach(c =>
           throw new IllegalArgumentException(
@@ -1266,7 +1280,7 @@ object Snapshots {
       // different hash bits — silently pruning files that hold the key.
       // Widening a point-lookup key type is a deliberate migration
       // (rewrite, or re-create the dataset), not a side effect.
-      prev.flatMap(_.schema).flatMap(_.fields.find(_.name == c))
+      prev.flatMap(_.schema.fields.find(_.name == c))
         .foreach(stored => require(stored.dataType == fld.dataType,
           s"bloom column $c cannot widen from ${stored.dataType} to " +
             s"${fld.dataType} — recorded filters hash the stored type"))
@@ -1354,7 +1368,7 @@ object Snapshots {
     val emptied = touchedDirs.map(_ -- stagedDirs).getOrElse(Set.empty)
     if (staged.isEmpty && emptied.isEmpty && deleteKeys.isEmpty &&
       extraRemoves.isEmpty && modeLabel == "replace_where" &&
-      prev.flatMap(_.schema).contains(contract)) {
+      prev.map(_.schema).contains(contract)) {
       // an idempotent backfill re-run: the predicate matched nothing and
       // the source was empty — publishing would burn a snapshot id to
       // record a no-op, and "rebuild day X" MUST be re-runnable against
@@ -1419,8 +1433,7 @@ object Snapshots {
         Some(rel)
       }
     val addEntries = staged.map(rel =>
-      entryFor(rel, statsByName.get(rel), seq, stagedLen.getOrElse(rel, -1L),
-        bloomRef))
+      entryFor(rel, statsByName.get(rel), seq, stagedLen(rel), bloomRef))
     // stage the equality-delete file (merge-on-read): the batch's key
     // rows, one small file in the dataset's format under deletes/, with
     // per-key min/max recorded so reads and folds can skip clean files
@@ -1461,7 +1474,7 @@ object Snapshots {
     val recentTags = (prev.map(_.recentTags).getOrElse(Seq.empty) ++ batchTag)
       .takeRight(MaxRecentTags)
     val meta = SnapMeta(modeLabel, contract, fmtTok, dsCodec, statsCols,
-      batchTag, partitionFields, Some(System.currentTimeMillis()), recentTags,
+      batchTag, partitionFields, System.currentTimeMillis(), recentTags,
       bloomCols, dsConstraints, prev.map(_.renames).getOrElse(Seq.empty))
     val chainDepth = prev.map(_.chainDepth).getOrElse(0)
     val content =
@@ -1516,7 +1529,7 @@ object Snapshots {
                 bloomCols, batchTag, staged, statsByName, stagedLen, bloomRef,
                 race, dAdds, cur, dsConstraints,
                 prev.map(_.renames).getOrElse(Seq.empty),
-                prev.flatMap(_.schema))
+                prev.map(_.schema))
             else if (RewriteRetryModes(modeLabel) && dAdds.isEmpty)
               // a ROW-PRESERVING maintenance rewrite (compact/fold) that
               // lost to a commuting winner rebases instead of aborting —
@@ -1529,7 +1542,7 @@ object Snapshots {
                 bloomRef, removes, dRemoves,
                 prevDeletes.map(_.rel).toSet,
                 prev.map(_.renames).getOrElse(Seq.empty), race,
-                prev.flatMap(_.schema))
+                prev.map(_.schema))
             else throw race
         }
     }
@@ -1549,18 +1562,17 @@ object Snapshots {
     * republished under a DOUBLE contract is the exact wrong-prune hazard
     * widenColumn's stale-stats path strips for every other file). Bloom
     * drift is separately caught by the bloomCols equality check
-    * (widening RETIRES a bloom declaration). Missing schemas compare
-    * stable — legacy manifests record no contract and no typed stats. */
+    * (widening RETIRES a bloom declaration). A first write that lost to
+    * another first write has no base contract and nothing to compare. */
   private def statTypesStable(
-      base: Option[StructType], head: Option[StructType],
-      statsCols: Seq[String]): Boolean = (base, head) match {
-    case (Some(b), Some(h)) => statsCols.forall { c =>
-      (b.fields.find(_.name == c), h.fields.find(_.name == c)) match {
+      base: Option[StructType], head: StructType,
+      statsCols: Seq[String]): Boolean = base.forall { b =>
+    statsCols.forall { c =>
+      (b.fields.find(_.name == c), head.fields.find(_.name == c)) match {
         case (Some(bf), Some(hf)) => bf.dataType == hf.dataType
         case _ => true
       }
     }
-    case _ => true
   }
 
   /** Mode labels whose lost races may rebase through
@@ -1623,8 +1635,7 @@ object Snapshots {
       val cur = currentSnapshot(spark, root)
       val prev = cur.map(resolve(f, qroot, _))
       // the winner may have been a redelivery of this very batch
-      if (batchTag.isDefined && prev.exists(p =>
-          p.batchTag == batchTag || p.recentTags.contains(batchTag.get)))
+      if (batchTag.exists(t => prev.exists(_.recentTags.contains(t))))
         return cur.get
       prev.foreach { p =>
         // constraints must MATCH the base's: the staged rows were
@@ -1638,15 +1649,13 @@ object Snapshots {
         val compatible = p.format == fmtTok && p.codec == dsCodec &&
           p.statsCols == statsCols && p.bloomCols == bloomCols &&
           p.constraints == baseConstraints && p.renames == baseRenames &&
-          (p.partitionCols.isEmpty || p.partitionCols == partitionFields) &&
+          p.partitionCols == partitionFields &&
           statTypesStable(baseSchema, p.schema, statsCols)
         if (!compatible) throw lastRace
       }
-      val contract = prev.flatMap(_.schema) match {
-        case Some(stored) => graft.schema.SchemaEvolution.validate(
-          stored, incoming, partitionFields, evolution)
-        case None => incoming
-      }
+      val contract = prev.fold(incoming)(p =>
+        graft.schema.SchemaEvolution.validate(
+          p.schema, incoming, partitionFields, evolution))
       if (dAdds.nonEmpty)
         mergeRebaseConflict(f, qroot, baseCur, cur, dAdds, contract,
           prev.toSeq.flatMap(_.deletes)).foreach { why =>
@@ -1658,8 +1667,7 @@ object Snapshots {
         }
       val id = cur.getOrElse(0) + 1
       val addEntries = staged.map(rel =>
-        entryFor(rel, statsByName.get(rel), id, stagedLen.getOrElse(rel, -1L),
-          bloomRef))
+        entryFor(rel, statsByName.get(rel), id, stagedLen(rel), bloomRef))
       // the delete entry re-anchors at the new id too: it must keep
       // suppressing everything strictly older, including the winners'
       // files (provably key-disjoint, so suppressing nothing of theirs)
@@ -1668,7 +1676,7 @@ object Snapshots {
         (prev.map(_.recentTags).getOrElse(Seq.empty) ++ batchTag)
           .takeRight(MaxRecentTags)
       val meta = SnapMeta(modeLabel, contract, fmtTok, dsCodec, statsCols,
-        batchTag, partitionFields, Some(System.currentTimeMillis()),
+        batchTag, partitionFields, System.currentTimeMillis(),
         recentTags, bloomCols, baseConstraints,
         prev.map(_.renames).getOrElse(Seq.empty))
       val chainDepth = prev.map(_.chainDepth).getOrElse(0)
@@ -1746,8 +1754,7 @@ object Snapshots {
         conflict("the dataset no longer has a committed snapshot"))
       val compatible = p.format == fmtTok && p.codec == dsCodec &&
         p.statsCols == statsCols && p.bloomCols == bloomCols &&
-        p.renames == baseRenames &&
-        (p.partitionCols.isEmpty || p.partitionCols == partitionFields) &&
+        p.renames == baseRenames && p.partitionCols == partitionFields &&
         statTypesStable(baseSchema, p.schema, statsCols)
       if (!compatible)
         conflict("an interleaved winner changed the dataset-fixed " +
@@ -1762,17 +1769,13 @@ object Snapshots {
         conflict(s"an interleaved winner added equality-delete $rel — " +
           "the restaged rows' rebased seq would outrank it"))
       val dRem = dRemoves.filter(headDel)
-      val contract = p.schema match {
-        case Some(stored) => graft.schema.SchemaEvolution.validate(
-          stored, incoming, partitionFields, evolution)
-        case None => incoming
-      }
+      val contract = graft.schema.SchemaEvolution.validate(
+        p.schema, incoming, partitionFields, evolution)
       val id = cur.getOrElse(0) + 1
       val addEntries = staged.map(rel =>
-        entryFor(rel, statsByName.get(rel), id, stagedLen.getOrElse(rel, -1L),
-          bloomRef))
+        entryFor(rel, statsByName.get(rel), id, stagedLen(rel), bloomRef))
       val meta = SnapMeta(modeLabel, contract, fmtTok, dsCodec, statsCols,
-        None, partitionFields, Some(System.currentTimeMillis()),
+        None, partitionFields, System.currentTimeMillis(),
         p.recentTags.takeRight(MaxRecentTags), bloomCols, p.constraints,
         p.renames)
       val content =
@@ -1986,10 +1989,9 @@ object Snapshots {
     // constraints follow the TARGET (like its schema/stat declarations):
     // the restored state must re-declare what held when it was current —
     // a live-carried rule could reference a column the target predates
-    val meta = SnapMeta("rollback",
-      target.schema.getOrElse(StructType(Seq.empty)), target.format,
+    val meta = SnapMeta("rollback", target.schema, target.format,
       target.codec, target.statsCols, None, target.partitionCols,
-      Some(System.currentTimeMillis()), live.recentTags, target.bloomCols,
+      System.currentTimeMillis(), live.recentTags, target.bloomCols,
       target.constraints, live.renames)
     val id = cur + 1
     val content =
@@ -2038,7 +2040,7 @@ object Snapshots {
       throw new IllegalStateException(s"no snapshot published under $root"))
     val m = resolve(f, qroot, id)
     sortBy.foreach { c =>
-      require(m.schema.forall(s => s.fields.exists(_.name == c)),
+      require(m.schema.fields.exists(_.name == c),
         s"sort column $c is not in the snapshot schema")
       require(!partitionFields.contains(c),
         s"sort column $c is a partition field — directory routing already " +
@@ -2340,15 +2342,14 @@ object Snapshots {
       throw new IllegalStateException(s"no snapshot published under $root"))
     val m = resolve(f, qroot, id)
     if (m.deletes.isEmpty) return None
-    val schema = m.schema.getOrElse(StructType(Seq.empty))
     val affectedDirs = m.files
-      .filter(e => m.deletes.exists(deleteApplies(_, e, schema)))
+      .filter(e => m.deletes.exists(deleteApplies(_, e, m.schema)))
       .map(e => parentDirOf(e.rel)).toSet
     if (affectedDirs.isEmpty) {
       // every delete is dead weight (already folded by compaction or
       // key-range-pruned everywhere): drop the entries metadata-only
-      val meta = SnapMeta("fold", schema, m.format, m.codec, m.statsCols,
-        None, m.partitionCols, Some(System.currentTimeMillis()),
+      val meta = SnapMeta("fold", m.schema, m.format, m.codec, m.statsCols,
+        None, m.partitionCols, System.currentTimeMillis(),
         m.recentTags, m.bloomCols, m.constraints, m.renames)
       val nid = id + 1
       val content =
@@ -2564,38 +2565,42 @@ object Snapshots {
       condition: org.apache.spark.sql.Column,
       assignments: Seq[(String, org.apache.spark.sql.Column)],
       targetFilesPerPartition: Int = 1): Option[Int] = {
-    import org.apache.spark.sql.functions.{coalesce, lit, when}
+    import org.apache.spark.sql.functions.{coalesce, lit}
     require(assignments.nonEmpty, "UPDATE needs at least one assignment")
     require(assignments.map(_._1).distinct.length == assignments.length,
       s"duplicate assignment targets: ${assignments.map(_._1).mkString(",")}")
     // validate targets against the recorded contract UP FRONT: the
     // transform only runs when a file matches, and a typo'd column must
     // not report the same success-shaped None as a legitimate no-match
-    // (legacy schema-less datasets keep the in-transform check)
-    recordedSchemaOpt(spark, root).foreach(sc =>
-      assignments.foreach { case (c, _) =>
-        require(sc.fieldNames.contains(c),
-          s"unknown UPDATE target column '$c' — the recorded contract " +
-            s"has ${sc.fieldNames.mkString(", ")}")
-      })
+    requireUpdateTargets(spark, root, assignments)
     val byCol = assignments.toMap
     rewriteWhere(spark, root, partitionFields, condition, "update_where",
-      targetFilesPerPartition, { rows =>
-        assignments.foreach { case (c, _) =>
-          require(rows.columns.contains(c),
-            s"unknown UPDATE target column '$c'") }
-        val matched = coalesce(condition, lit(false))
-        // ONE projection: every RHS sees the pre-update row, and the
-        // condition never re-evaluates against an already-updated column
-        rows.select(rows.columns.toSeq.map { c =>
-          byCol.get(c) match {
-            case Some(e) =>
-              when(matched, e.cast(rows.schema(c).dataType))
-                .otherwise(qc(c)).as(c)
-            case None => qc(c)
-          }
-        }: _*)
-      })
+      targetFilesPerPartition, rows =>
+        assignWhere(rows, rows, coalesce(condition, lit(false)), byCol))
+  }
+
+  /** UPDATE's ONE projection of `rows` (selected from `src`, which may
+    * carry join markers over `rows`): every RHS sees the pre-update row,
+    * casts to the column's type and applies only where `matched` holds,
+    * so the condition never re-evaluates against an updated column. The
+    * targets are checked again here, against the contract the rewrite
+    * actually resolved: a RENAME or DROP COLUMN published after the
+    * up-front check would otherwise drop its assignment silently. */
+  private[sink] def assignWhere(
+      src: DataFrame, rows: DataFrame,
+      matched: org.apache.spark.sql.Column,
+      byCol: Map[String, org.apache.spark.sql.Column]): DataFrame = {
+    import org.apache.spark.sql.functions.when
+    byCol.keys.foreach(c => require(rows.columns.contains(c),
+      s"unknown UPDATE target column '$c' — the rewritten snapshot has " +
+        rows.columns.mkString(", ")))
+    src.select(rows.columns.toSeq.map { c =>
+      byCol.get(c) match {
+        case Some(e) =>
+          when(matched, e.cast(rows.schema(c).dataType)).otherwise(qc(c)).as(c)
+        case None => qc(c)
+      }
+    }: _*)
   }
 
   /**
@@ -2659,16 +2664,11 @@ object Snapshots {
       assignments: Seq[(String, org.apache.spark.sql.Column)],
       targetFilesPerPartition: Int = 1,
       keysNormalized: Boolean = false): Option[Int] = {
-    import org.apache.spark.sql.functions.{coalesce, lit, when}
+    import org.apache.spark.sql.functions.{coalesce, lit}
     require(assignments.nonEmpty, "UPDATE needs at least one assignment")
     require(assignments.map(_._1).distinct.length == assignments.length,
       s"duplicate assignment targets: ${assignments.map(_._1).mkString(",")}")
-    recordedSchemaOpt(spark, root).foreach(sc =>
-      assignments.foreach { case (c, _) =>
-        require(sc.fieldNames.contains(c),
-          s"unknown UPDATE target column '$c' — the recorded contract " +
-            s"has ${sc.fieldNames.mkString(", ")}")
-      })
+    requireUpdateTargets(spark, root, assignments)
     val byCol = assignments.toMap
     rewriteWhereInSet(spark, root, partitionFields, keyColumn, keys, rest,
       "update_where", targetFilesPerPartition, keysNormalized,
@@ -2681,14 +2681,7 @@ object Snapshots {
           rows(qname(keyColumn)) === marked("__graft_in_key"), "left_outer")
         val matched = rest.map(c => coalesce(c, lit(false)))
           .getOrElse(lit(true)) && qc("__graft_in_hit").isNotNull
-        joined.select(rows.columns.toSeq.map { c =>
-          byCol.get(c) match {
-            case Some(e) =>
-              when(matched, e.cast(rows.schema(c).dataType))
-                .otherwise(qc(c)).as(c)
-            case None => qc(c)
-          }
-        }: _*)
+        assignWhere(joined, rows, matched, byCol)
       })
   }
 
@@ -2739,17 +2732,16 @@ object Snapshots {
     }
     val (f, qroot) = FsOps.fs(spark, root)
     val m = resolve(f, qroot, cur)
-    m.partitionCols.headOption.foreach(_ => require(
-      partitionFields == m.partitionCols,
+    require(partitionFields == m.partitionCols,
       s"dataset at $root is partitioned by ${m.partitionCols.mkString(",")}; " +
-        s"cannot replace under ${partitionFields.mkString(",")}"))
+        s"cannot replace under ${partitionFields.mkString(",")}")
     // the union below fills columns missing from SURVIVORS (a widening
     // batch) with nulls — but a batch missing CONTRACT columns would
     // silently null-fill the replacement rows, so that direction is loud
-    m.schema.foreach(_.fieldNames.foreach(c =>
+    m.schema.fieldNames.foreach(c =>
       require(df.columns.contains(c),
         s"replaceWhere batch must carry every contract column — " +
-          s"missing '$c'")))
+          s"missing '$c'"))
     // the same narrowing + exact-discovery discipline as every rewrite
     // lane (tz-guarded stat prune, Bloom, scan-side input_file_name)
     val rewrite = discoverRewriteSet(spark, qroot, m,
@@ -2888,10 +2880,9 @@ object Snapshots {
     val id = currentSnapshot(spark, root).getOrElse(
       throw new IllegalStateException(s"no snapshot published under $root"))
     val m = resolve(f, qroot, id)
-    m.partitionCols.headOption.foreach(_ => require(
-      partitionFields == m.partitionCols,
+    require(partitionFields == m.partitionCols,
       s"dataset at $root is partitioned by ${m.partitionCols.mkString(",")}; " +
-        s"cannot rewrite under ${partitionFields.mkString(",")}"))
+        s"cannot rewrite under ${partitionFields.mkString(",")}")
     if (m.files.isEmpty) return None
     val rewrite = discoverRewriteSet(spark, qroot, m, deriveFor, discover)
     if (rewrite.isEmpty) return None
@@ -2909,8 +2900,7 @@ object Snapshots {
     * one place for the correctness-sensitive discipline:
     *
     *  - `deriveFor` yields conservative ranges against the RECORDED
-    *    contract (legacy schema-less datasets derive nothing — no
-    *    pruning, never wrong pruning);
+    *    contract;
     *  - TimestampType columns STAT-prune NOTHING: the recorded min/max
     *    strings were rendered under the WRITING session's timezone, and
     *    a session configured differently would compare shifted bounds —
@@ -2930,9 +2920,8 @@ object Snapshots {
       deriveFor: (StructType, Seq[String], Seq[String]) => Seq[StatRange],
       discover: DataFrame => DataFrame): Seq[FileEntry] = {
     import org.apache.spark.sql.functions.input_file_name
-    val schema = m.schema.getOrElse(StructType(Seq.empty))
-    val derived = m.schema.toSeq.flatMap(sc =>
-      deriveFor(sc, m.statsCols, m.bloomCols))
+    val schema = m.schema
+    val derived = deriveFor(schema, m.statsCols, m.bloomCols)
     val statSafe = derived.filter(r => r.nullness.isDefined ||
       !schema.fields.exists(fd =>
         fd.name == r.column && fd.dataType == TimestampType))
@@ -3018,9 +3007,7 @@ object Snapshots {
         s"no snapshot published under $root — the first write declares " +
           "the initial schema directly"))
     val m = resolve(f, qroot, cur)
-    val stored = m.schema.getOrElse(throw new IllegalStateException(
-      s"snapshot s$cur records no schema contract — one write through " +
-        "the Snapshots API pins it before metadata-only evolution"))
+    val stored = m.schema
     // duplicate checks use the SESSION's resolver (case-insensitive by
     // default, like every analyzer comparison): publishing both `note`
     // and `Note` would make every later SELECT fail AMBIGUOUS_REFERENCE
@@ -3054,7 +3041,7 @@ object Snapshots {
     publishMetaOnly(f, qroot, cur, m,
       SnapMeta("evolve_schema", widened, m.format, m.codec,
         m.statsCols, None, m.partitionCols,
-        Some(System.currentTimeMillis()), m.recentTags, m.bloomCols,
+        System.currentTimeMillis(), m.recentTags, m.bloomCols,
         m.constraints, m.renames))
   }
 
@@ -3121,9 +3108,7 @@ object Snapshots {
       throw new IllegalStateException(
         s"no snapshot published under $root — nothing to rename"))
     val m = resolve(f, qroot, cur)
-    val stored = m.schema.getOrElse(throw new IllegalStateException(
-      s"snapshot s$cur records no schema contract — one write through " +
-        "the Snapshots API pins it before metadata-only evolution"))
+    val stored = m.schema
     val resolver = spark.sessionState.conf.resolver
     val field = mappableColumn(spark, m, stored, from, "RENAME COLUMN")
     require(to.nonEmpty, "RENAME COLUMN: the new name must be non-empty")
@@ -3148,7 +3133,7 @@ object Snapshots {
     publishMetaOnly(f, qroot, cur, m,
       SnapMeta("rename_column", newSchema, m.format, m.codec,
         m.statsCols.map(c => if (c == field.name) to else c), None,
-        m.partitionCols, Some(System.currentTimeMillis()), m.recentTags,
+        m.partitionCols, System.currentTimeMillis(), m.recentTags,
         m.bloomCols.map(c => if (c == field.name) to else c),
         m.constraints, m.renames :+ ((cur + 1, field.name, to))))
   }
@@ -3193,9 +3178,7 @@ object Snapshots {
       throw new IllegalStateException(
         s"no snapshot published under $root — nothing to widen"))
     val m = resolve(f, qroot, cur)
-    val stored = m.schema.getOrElse(throw new IllegalStateException(
-      s"snapshot s$cur records no schema contract — one write through " +
-        "the Snapshots API pins it before metadata-only evolution"))
+    val stored = m.schema
     val resolver = spark.sessionState.conf.resolver
     val field = stored.fields.find(fd => resolver(fd.name, name)).getOrElse(
       throw new IllegalArgumentException(
@@ -3221,7 +3204,7 @@ object Snapshots {
     val staleStats = field.dataType == FloatType && newType == DoubleType
     val meta = SnapMeta("evolve_schema", widened, m.format, m.codec,
       m.statsCols, None, m.partitionCols,
-      Some(System.currentTimeMillis()), m.recentTags, blooms,
+      System.currentTimeMillis(), m.recentTags, blooms,
       m.constraints, m.renames)
     if (!staleStats) publishMetaOnly(f, qroot, cur, m, meta)
     else {
@@ -3248,9 +3231,7 @@ object Snapshots {
       throw new IllegalStateException(
         s"no snapshot published under $root — nothing to drop"))
     val m = resolve(f, qroot, cur)
-    val stored = m.schema.getOrElse(throw new IllegalStateException(
-      s"snapshot s$cur records no schema contract — one write through " +
-        "the Snapshots API pins it before metadata-only evolution"))
+    val stored = m.schema
     var remaining = stored
     val dropped = names.map { name =>
       val field = mappableColumn(spark, m, remaining, name, "DROP COLUMN")
@@ -3263,7 +3244,7 @@ object Snapshots {
     publishMetaOnly(f, qroot, cur, m,
       SnapMeta("drop_column", remaining,
         m.format, m.codec, m.statsCols.filterNot(gone), None,
-        m.partitionCols, Some(System.currentTimeMillis()), m.recentTags,
+        m.partitionCols, System.currentTimeMillis(), m.recentTags,
         m.bloomCols.filterNot(gone), m.constraints,
         m.renames ++ dropped.map(n => (cur + 1, n, ""))))
   }
@@ -3288,13 +3269,9 @@ object Snapshots {
         s"no snapshot published under $root — nothing to truncate"))
     val m = resolve(f, qroot, cur)
     if (m.files.isEmpty && m.deletes.isEmpty) return None
-    val stored = m.schema.getOrElse(throw new IllegalStateException(
-      s"snapshot s$cur records no schema contract (legacy v1 manifest) — " +
-        "an empty state must still declare what readers resolve; one v2 " +
-        "write pins the contract first"))
-    val meta = SnapMeta("truncate", stored, m.format, m.codec,
+    val meta = SnapMeta("truncate", m.schema, m.format, m.codec,
       m.statsCols, None, m.partitionCols,
-      Some(System.currentTimeMillis()), m.recentTags, m.bloomCols,
+      System.currentTimeMillis(), m.recentTags, m.bloomCols,
       m.constraints, m.renames)
     val id = cur + 1
     val content =
@@ -3332,9 +3309,7 @@ object Snapshots {
         s"no snapshot published under $root — the first write can carry " +
           "no pre-declared constraints; write, then add"))
     val m = resolve(f, qroot, cur)
-    val stored = m.schema.getOrElse(throw new IllegalStateException(
-      s"snapshot s$cur records no schema contract — one write through " +
-        "the Snapshots API pins it before constraints can validate"))
+    val stored = m.schema
     m.constraints.find(_._1 == name).foreach(existing =>
       throw new IllegalArgumentException(
         s"constraint '$name' already exists: ${existing._2} — " +
@@ -3371,7 +3346,7 @@ object Snapshots {
     publishMetaOnly(f, qroot, cur, m,
       SnapMeta("add_constraint", stored, m.format, m.codec,
         m.statsCols, None, m.partitionCols,
-        Some(System.currentTimeMillis()), m.recentTags, m.bloomCols,
+        System.currentTimeMillis(), m.recentTags, m.bloomCols,
         m.constraints :+ (name -> exprSql), m.renames))
   }
 
@@ -3386,10 +3361,9 @@ object Snapshots {
     val m = resolve(f, qroot, cur)
     if (!m.constraints.exists(_._1 == name)) return None
     Some(publishMetaOnly(f, qroot, cur, m,
-      SnapMeta("drop_constraint",
-        m.schema.getOrElse(StructType(Seq.empty)), m.format, m.codec,
+      SnapMeta("drop_constraint", m.schema, m.format, m.codec,
         m.statsCols, None, m.partitionCols,
-        Some(System.currentTimeMillis()), m.recentTags, m.bloomCols,
+        System.currentTimeMillis(), m.recentTags, m.bloomCols,
         m.constraints.filterNot(_._1 == name), m.renames)))
   }
 
@@ -3429,15 +3403,10 @@ object Snapshots {
         s"no snapshot published under $root — the first write declares " +
           "the initial spec directly"))
     val m = resolve(f, qroot, cur)
-    require(m.partitionCols.nonEmpty,
-      s"dataset at $root predates recorded partition specs — one write " +
-        "under the current layout pins it first")
     require(newSpec != m.partitionCols,
       s"dataset at $root is already partitioned by ${newSpec.mkString(",")}")
-    val schema = m.schema.getOrElse(throw new IllegalStateException(
-      s"snapshot s$cur records no schema — cannot evolve its spec"))
     newSpec.foreach { c =>
-      val fld = schema.fields.find(_.name == c).getOrElse(
+      val fld = m.schema.fields.find(_.name == c).getOrElse(
         throw new IllegalArgumentException(
           s"partition field $c is not in the dataset schema"))
       require(isStatType(fld.dataType),
@@ -3447,8 +3416,8 @@ object Snapshots {
           "pruning would shadow its file stats")
     }
     publishMetaOnly(f, qroot, cur, m,
-      SnapMeta("evolve_spec", schema, m.format, m.codec,
-        m.statsCols, None, newSpec, Some(System.currentTimeMillis()),
+      SnapMeta("evolve_spec", m.schema, m.format, m.codec,
+        m.statsCols, None, newSpec, System.currentTimeMillis(),
         m.recentTags, m.bloomCols, m.constraints, m.renames))
   }
 
@@ -3472,10 +3441,9 @@ object Snapshots {
     val id = currentSnapshot(spark, root).getOrElse(
       throw new IllegalStateException(s"no snapshot published under $root"))
     val m = resolve(f, qroot, id)
-    m.partitionCols.headOption.foreach(_ => require(
-      partitionFields == m.partitionCols,
+    require(partitionFields == m.partitionCols,
       s"dataset at $root is partitioned by ${m.partitionCols.mkString(",")}; " +
-        s"cannot migrate to ${partitionFields.mkString(",")}"))
+        s"cannot migrate to ${partitionFields.mkString(",")}")
     val old = m.files.filter(e => sigOf(e.rel) != partitionFields)
     if (old.isEmpty) return None
     val rewritten = scanWithDeletes(spark, qroot, m, old)
@@ -3620,17 +3588,15 @@ object Snapshots {
     // consumer with a key filter never opens non-intersecting new files;
     // an unknown prune column fails loudly here too (a typo silently
     // disabling skipping would read as "pruned" while scanning everything)
-    prune.foreach(r => require(
-      m.schema.forall(s => s.fields.exists(_.name == r.column)),
+    prune.foreach(r => require(m.schema.fields.exists(_.name == r.column),
       s"prune column ${r.column} is not in the snapshot schema"))
     // same timestamp split as [[read]]: tz-rendered min/max strings never
     // compare against a caller's bound; counts and blooms still prune
     val statSafe = prune.filter(r => r.nullness.isDefined ||
-      !m.schema.exists(_.fields.exists(fd =>
-        fd.name == r.column && fd.dataType == TimestampType)))
+      !m.schema.fields.exists(fd =>
+        fd.name == r.column && fd.dataType == TimestampType))
     val added0 = m.files.filterNot(e => before(e.rel))
-      .filter(e => statSafe.isEmpty ||
-        survives(e, statSafe, m.schema.getOrElse(StructType(Seq.empty))))
+      .filter(e => statSafe.isEmpty || survives(e, statSafe, m.schema))
     val added =
       if (prune.isEmpty) added0
       else bloomPrune(spark, qroot, m, added0, prune)
@@ -3646,8 +3612,9 @@ object Snapshots {
     * incremental-append contract), (0, 0) for row-preserving
     * maintenance and non-append modes (the stream emits nothing from
     * them), and (-1, -1) when the cost is UNKNOWN — the manifest is
-    * missing (expired; the read path raises the named STALE error) or a
-    * file predates row/byte recording. FULL-rendered manifests (the
+    * missing (expired; the read path raises the named STALE error). Rows
+    * read -1 alone when the dataset records no row counts (no stats or
+    * bloom columns declared). FULL-rendered manifests (the
     * every-`RebaseEvery`-th write, expire's rebase-in-place) still
     * answer exactly: main writes stamp their own files `seq = id`, so
     * the snapshot's increment is the seq-matching subset — the budget
@@ -3668,23 +3635,10 @@ object Snapshots {
           else raw.adds
         val rows =
           if (own.forall(_.rows >= 0)) own.map(_.rows).sum else -1L
-        val bytes =
-          if (own.forall(_.bytes >= 0)) own.map(_.bytes).sum else -1L
-        (rows, bytes)
+        (rows, own.map(_.bytes).sum)
       case _ => (0L, 0L)
     }
   }
-
-  /** The head's rolling replay-tag window ([[MaxRecentTags]], carried
-    * manifest to manifest) — what a tagged write converges against.
-    * Exposed so the stream sink can recognize LEGACY (pre-query-scoped)
-    * tags during an upgrade; one small manifest read. */
-  private[graft] def recentReplayTags(
-      spark: SparkSession, root: String): Seq[String] =
-    currentSnapshot(spark, root).map { id =>
-      val (f, qroot) = FsOps.fs(spark, root)
-      readSnapshotFile(f, qroot, id).effectiveRecentTags
-    }.getOrElse(Seq.empty)
 
   /** The oldest snapshot id [[expire]] has retained — the earliest point
     * a fresh incremental consumer can bootstrap from (expired history
@@ -3749,11 +3703,9 @@ object Snapshots {
   private def deleteDiffDirs(a: Resolved, b: Resolved): Set[String] = {
     val aRels = a.deletes.map(_.rel).toSet
     val bRels = b.deletes.map(_.rel).toSet
-    def affected(side: Resolved, dels: Seq[DeleteEntry]): Set[String] = {
-      val schema = side.schema.getOrElse(StructType(Seq.empty))
-      side.files.filter(e => dels.exists(deleteApplies(_, e, schema)))
+    def affected(side: Resolved, dels: Seq[DeleteEntry]): Set[String] =
+      side.files.filter(e => dels.exists(deleteApplies(_, e, side.schema)))
         .map(e => parentDirOf(e.rel)).toSet
-    }
     affected(b, b.deletes.filterNot(d => aRels(d.rel))) ++
       affected(a, a.deletes.filterNot(d => bRels(d.rel)))
   }
@@ -3818,15 +3770,12 @@ object Snapshots {
     val dirs = (aBy.keySet ++ bBy.keySet)
       .filter(d => aBy.get(d).map(_.toSet) != bBy.get(d).map(_.toSet)) ++
       deleteDiffDirs(a, b)
-    val bSchema = b.schema.getOrElse(throw new IllegalStateException(
-      s"snapshot s$toId records no schema — cannot diff"))
+    val bSchema = b.schema
     // each side's slice applies ITS OWN snapshot's equality-deletes — the
     // diff compares visible rows, not raw file contents
     def slice(m: Resolved, entries: Seq[FileEntry]): DataFrame =
       if (entries.isEmpty)
-        spark.createDataFrame(
-          new java.util.ArrayList[Row](),
-          m.schema.getOrElse(bSchema))
+        spark.createDataFrame(new java.util.ArrayList[Row](), m.schema)
       else scanWithDeletes(spark, qroot, m, entries)
     val dfA = slice(a, a.files.filter(e => dirs(parentDirOf(e.rel))))
     val dfB = slice(b, b.files.filter(e => dirs(parentDirOf(e.rel))))
@@ -3951,19 +3900,21 @@ object Snapshots {
     val (f, qroot) = FsOps.fs(spark, root)
     val id = asOf.orElse(currentSnapshot(spark, root)).getOrElse(
       throw new IllegalStateException(s"no snapshot published under $root"))
-    readResolved(spark, qroot, resolve(f, qroot, id), prune, s"s$id")
+    readResolved(spark, qroot, resolve(f, qroot, id), prune)
   }
 
-  /** The current manifest's recorded contract, if it carries one — the
-    * legacy-tolerant (and no-dataset-tolerant) twin of [[tableSchema]]
-    * for callers that merely want to validate against the contract when
-    * one exists. */
-  private def recordedSchemaOpt(
-      spark: SparkSession, root: String): Option[StructType] =
-    currentSnapshot(spark, root).flatMap { id =>
-      val (f, qroot) = FsOps.fs(spark, root)
-      readSnapshotFile(f, qroot, id).schema
+  /** Every UPDATE assignment must target a column of the current
+    * recorded contract ([[updateWhere]], [[updateWhereIn]]). */
+  private def requireUpdateTargets(
+      spark: SparkSession, root: String,
+      assignments: Seq[(String, org.apache.spark.sql.Column)]): Unit = {
+    val sc = tableSchema(spark, root)
+    assignments.foreach { case (c, _) =>
+      require(sc.fieldNames.contains(c),
+        s"unknown UPDATE target column '$c' — the recorded contract " +
+          s"has ${sc.fieldNames.mkString(", ")}")
     }
+  }
 
   /** The recorded read contract of a snapshot (current by default) — one
     * manifest read, no chain resolution, no file listing (every manifest
@@ -3975,17 +3926,14 @@ object Snapshots {
     val (f, qroot) = FsOps.fs(spark, root)
     val id = asOf.orElse(currentSnapshot(spark, root)).getOrElse(
       throw new IllegalStateException(s"no snapshot published under $root"))
-    readSnapshotFile(f, qroot, id).schema.getOrElse(
-      throw new IllegalStateException(
-        s"snapshot s$id records no schema (legacy v1 manifest) — one v2 " +
-          "write pins the contract"))
+    readSnapshotFile(f, qroot, id).schema
   }
 
   /** Per-partition operational stats of a snapshot (current by default),
     * answered from the manifest alone — no data file or directory is
-    * touched: live file count, row count (null when any file predates
-    * count recording), byte size (likewise), and the partition's
-    * relative directory. The input a compaction/skew policy wants ("which
+    * touched: live file count, row count (null when the dataset records
+    * no row counts — no stats or bloom columns declared), byte size, and
+    * the partition's relative directory. The input a compaction/skew policy wants ("which
     * partitions are over-fragmented or outsized") and the
     * `partitionStats`-style health read, at metadata cost. */
   def partitionStats(
@@ -4000,29 +3948,27 @@ object Snapshots {
       .map { case (dir, es) =>
         (dir, es.length.toLong,
           if (es.forall(_.rows >= 0)) Some(es.map(_.rows).sum) else None,
-          if (es.forall(_.bytes >= 0)) Some(es.map(_.bytes).sum) else None)
+          es.map(_.bytes).sum)
       }.toDF("partition", "n_files", "n_rows", "n_bytes")
   }
 
   /** Total bytes of a snapshot's live data files, answered from the
-    * manifest's recorded per-file lengths alone — None when any live
-    * file predates length recording. What
+    * manifest's recorded per-file lengths alone. What
     * [[graft.sources.SnapshotRelation]] hands Catalyst as `sizeInBytes`,
     * so a small snapshot table becomes broadcast-joinable without a
     * filesystem walk. */
   def liveDataBytes(
       spark: SparkSession, root: String,
-      asOf: Option[Int] = None): Option[Long] = {
+      asOf: Option[Int] = None): Long = {
     val (f, qroot) = FsOps.fs(spark, root)
     val id = asOf.orElse(currentSnapshot(spark, root)).getOrElse(
       throw new IllegalStateException(s"no snapshot published under $root"))
-    val files = resolve(f, qroot, id).files
-    if (files.forall(_.bytes >= 0)) Some(files.map(_.bytes).sum) else None
+    resolve(f, qroot, id).files.map(_.bytes).sum
   }
 
   /** The partition spec in force at the current snapshot (the manifest's
-    * `partitionby=` line) — one manifest read; empty for legacy datasets
-    * that predate recorded specs. What SQL `INSERT INTO` routes under. */
+    * `partitionby=` line) — one manifest read. What SQL `INSERT INTO`
+    * routes under. */
   def recordedPartitionCols(spark: SparkSession, root: String): Seq[String] = {
     val (f, qroot) = FsOps.fs(spark, root)
     val id = currentSnapshot(spark, root).getOrElse(
@@ -4068,9 +4014,7 @@ object Snapshots {
   /** The newest retained snapshot published at or before `tsMillis`
     * (epoch millis) — resolved from each manifest's RECORDED publish
     * instant, which survives expire's rebase-in-place (file mtimes do
-    * not). None when every retained snapshot is newer. Snapshots
-    * predating timestamp recording resolve as id order allows: they are
-    * older than every stamped one by construction. */
+    * not). None when every retained snapshot is newer. */
   def snapshotAt(
       spark: SparkSession, root: String, tsMillis: Long): Option[Int] = {
     val (f, qroot) = FsOps.fs(spark, root)
@@ -4078,11 +4022,9 @@ object Snapshots {
     val cache = scala.collection.mutable.Map.empty[Int, RawManifest]
     val ids = committedIds(f, qroot, cur)
     // ts is monotone in id (single-writer publishes in id order), so the
-    // newest qualifying id is the answer; an unstamped (legacy) manifest
-    // qualifies iff some stamped descendant does or none is stamped
-    ids.reverse.find { id =>
-      readSnapshotFileCached(f, qroot, id, cache).ts.forall(_ <= tsMillis)
-    }
+    // newest qualifying id is the answer
+    ids.reverse.find(id =>
+      readSnapshotFileCached(f, qroot, id, cache).ts <= tsMillis)
   }
 
   /** Time-based travel: [[read]] at [[snapshotAt]]`(tsMillis)` — "the
@@ -4106,8 +4048,8 @@ object Snapshots {
 
   /** Per-live-file manifest inventory of a snapshot (current by
     * default) — relative path, partition dir, manifest-stamped sequence
-    * (the snapshot that added it), row count and byte size (null when
-    * the file predates recording). Answered from the manifest alone —
+    * (the snapshot that added it), row count (null when the dataset
+    * records no row counts) and byte size. Answered from the manifest alone —
     * the `DESCRIBE DETAIL`-files / `inputFiles` role at metadata cost,
     * no directory listing, no data file opened. */
   def liveFiles(
@@ -4118,13 +4060,8 @@ object Snapshots {
     val id = asOf.orElse(currentSnapshot(spark, root)).getOrElse(
       throw new IllegalStateException(s"no snapshot published under $root"))
     resolve(f, qroot, id).files.sortBy(_.rel)
-      // legacy entries predate seq recording (parser default 0; ids
-      // start at 1) — null, like the rows/bytes columns, never a
-      // nonexistent s0
-      .map(e => (e.rel, parentDirOf(e.rel),
-        if (e.seq > 0) Some(e.seq) else None,
-        if (e.rows >= 0) Some(e.rows) else None,
-        if (e.bytes >= 0) Some(e.bytes) else None))
+      .map(e => (e.rel, parentDirOf(e.rel), e.seq,
+        if (e.rows >= 0) Some(e.rows) else None, e.bytes))
       .toDF("file", "partition", "added_by", "n_rows", "n_bytes")
   }
 
@@ -4148,9 +4085,7 @@ object Snapshots {
       if (m.files.nonEmpty && m.files.forall(_.rows >= 0))
         Some(m.files.map(_.rows).sum)
       else if (m.files.isEmpty) Some(0L) else None,
-      if (m.files.nonEmpty && m.files.forall(_.bytes >= 0))
-        Some(m.files.map(_.bytes).sum)
-      else if (m.files.isEmpty) Some(0L) else None,
+      m.files.map(_.bytes).sum,
       m.deletes.length.toLong,
       tags(spark, root).size.toLong,
       branches(spark, root).size.toLong,
@@ -4163,10 +4098,9 @@ object Snapshots {
 
   private def readResolved(
       spark: SparkSession, qroot: Path, m: Resolved,
-      prune: Seq[StatRange], label: String): DataFrame = {
+      prune: Seq[StatRange]): DataFrame = {
     val schema = m.schema
-    prune.foreach(r => require(
-      schema.forall(s => s.fields.exists(_.name == r.column)),
+    prune.foreach(r => require(schema.fields.exists(_.name == r.column),
       s"prune column ${r.column} is not in the snapshot schema"))
     // TimestampType ranges never consult the min/max strings (recorded
     // under the WRITING session's timezone; the caller's bound renders
@@ -4175,21 +4109,18 @@ object Snapshots {
     // hashes internal values, so both stay on for timestamps — the same
     // split deleteWhere applies to derived ranges.
     val statSafe = prune.filter(r => r.nullness.isDefined ||
-      !schema.exists(_.fields.exists(fd =>
-        fd.name == r.column && fd.dataType == TimestampType)))
+      !schema.fields.exists(fd =>
+        fd.name == r.column && fd.dataType == TimestampType))
     val statKept =
       if (statSafe.isEmpty) m.files
-      else m.files.filter(e =>
-        survives(e, statSafe, schema.getOrElse(StructType(Seq.empty))))
+      else m.files.filter(e => survives(e, statSafe, schema))
     val kept =
       if (prune.isEmpty) statKept
       else bloomPrune(spark, qroot, m, statKept, prune)
     if (kept.isEmpty) {
       // a legitimately-empty state (or a fully-pruned read) is an empty
       // frame under the contract — never an unreadable dataset
-      val s = schema.getOrElse(throw new IllegalStateException(
-        s"snapshot $label is empty and records no schema"))
-      return spark.createDataFrame(new java.util.ArrayList[Row](), s)
+      return spark.createDataFrame(new java.util.ArrayList[Row](), schema)
     }
     // the recorded schema IS the read contract: inference-free, stable
     // column order, widened columns resolve against pre-widening files
@@ -4220,8 +4151,7 @@ object Snapshots {
   }
 
   /** Operational log of every retained snapshot — [[history]] plus the
-    * newer manifest metadata: publish instant (null for snapshots
-    * predating timestamps), the partition spec in force, live
+    * manifest metadata: publish instant, the partition spec in force, live
     * equality-delete file count (non-zero = merge-on-read reads pending
     * a fold), and the stream replay tag if one published it. Manifests
     * only; no data file is opened. The schedulable health read: "is this
@@ -4234,22 +4164,19 @@ object Snapshots {
     committedIds(f, qroot, cur).map { id =>
       val m = resolve(f, qroot, id, cache)
       // row count answered from per-file manifest counts alone — null
-      // when any live file predates count recording (or no statsColumns
-      // pass runs at write). Note: rows merge-on-read deletes suppress
-      // are still counted (the log reads no data; fold to settle them).
+      // when no statsColumns pass runs at write. Note: rows merge-on-read
+      // deletes suppress are still counted (the log reads no data; fold
+      // to settle them).
       val nRows =
         if (m.files.nonEmpty && m.files.forall(_.rows >= 0))
           Some(m.files.map(_.rows).sum)
         else if (m.files.isEmpty) Some(0L)
         else None
-      val nBytes =
-        if (m.files.forall(_.bytes >= 0)) Some(m.files.map(_.bytes).sum)
-        else None
-      (id, m.mode, m.ts.map(new java.sql.Timestamp(_)),
+      (id, m.mode, new java.sql.Timestamp(m.ts),
         m.partitionCols.mkString(","), m.files.length.toLong,
         m.files.map(e => parentDirOf(e.rel)).distinct.length.toLong,
         m.deletes.length.toLong, m.batchTag, cur.contains(id), nRows,
-        nBytes)
+        m.files.map(_.bytes).sum)
     }.toDF("snapshot_id", "mode", "published_at", "partition_spec",
       "n_files", "n_partitions", "n_delete_files", "batch_tag", "is_current",
       "n_rows", "n_bytes")
@@ -4376,15 +4303,16 @@ object Snapshots {
     branchHeadOpt(f, qroot, name).getOrElse(throw new IllegalStateException(
       s"no branch '$name' under $qroot — createBranch first"))
 
-  /** (fork main id, incarnation nonce) from a branch's FORK file —
-    * pre-nonce files read an empty nonce. */
+  /** (fork main id, incarnation nonce) from a branch's FORK file. */
   private def readFork(
-      f: FileSystem, qroot: Path, name: String): (Int, String) = {
-    val parts = readSmall(f,
-      new Path(branchDir(qroot, name), "FORK")).split(" ", 2)
-    (parseSnapRef(s"branch '$name' FORK", parts(0)),
-      if (parts.length > 1) parts(1) else "")
-  }
+      f: FileSystem, qroot: Path, name: String): (Int, String) =
+    readSmall(f, new Path(branchDir(qroot, name), "FORK")).split(" ", 2) match {
+      case Array(fork, nonce) if nonce.nonEmpty =>
+        (parseSnapRef(s"branch '$name' FORK", fork), nonce)
+      case other => throw new IllegalStateException(
+        s"corrupt branch '$name' FORK: expected 's<N> <nonce>', got " +
+          s"'${other.mkString(" ")}'")
+    }
 
   /**
    * WRITABLE BRANCH: fork the dataset at a snapshot into a named lineage
@@ -4419,9 +4347,8 @@ object Snapshots {
     require(!f.exists(new Path(bdir, "HEAD")),
       s"branch '$name' already exists under $root — dropBranch first")
     val m = resolve(f, qroot, forkId)
-    val meta = SnapMeta("branch_fork",
-      m.schema.getOrElse(StructType(Seq.empty)), m.format, m.codec,
-      m.statsCols, None, m.partitionCols, Some(System.currentTimeMillis()),
+    val meta = SnapMeta("branch_fork", m.schema, m.format, m.codec,
+      m.statsCols, None, m.partitionCols, System.currentTimeMillis(),
       bloomCols = m.bloomCols, constraints = m.constraints,
       renames = m.renames)
     f.mkdirs(bdir)
@@ -4463,7 +4390,7 @@ object Snapshots {
     val id = asOf.getOrElse(head)
     require(id <= head, s"branch '$name' has no snapshot s$id (head s$head)")
     readResolved(spark, qroot, resolveIn(f, branchDir(qroot, name), id),
-      prune, s"branch '$name' s$id")
+      prune)
   }
 
   /** The recorded read contract at a branch's head — the branch twin of
@@ -4474,9 +4401,7 @@ object Snapshots {
     requireRefName("branch", name)
     val (f, qroot) = FsOps.fs(spark, root)
     val head = branchHead(f, qroot, name)
-    readSnapshotFileIn(f, branchDir(qroot, name), head).schema.getOrElse(
-      throw new IllegalStateException(
-        s"branch '$name' head s$head records no schema"))
+    readSnapshotFileIn(f, branchDir(qroot, name), head).schema
   }
 
   /** A branch's head id, if the branch exists — the pointer value a
@@ -4555,10 +4480,9 @@ object Snapshots {
     val liveRels = live.files.map(_.rel).toSet
     val merged = b.files.map(e =>
       if (liveRels(e.rel)) e else e.copy(seq = id))
-    val meta = SnapMeta("branch_merge",
-      b.schema.getOrElse(StructType(Seq.empty)), b.format, b.codec,
+    val meta = SnapMeta("branch_merge", b.schema, b.format, b.codec,
       b.statsCols, Some(mergeTag), b.partitionCols,
-      Some(System.currentTimeMillis()),
+      System.currentTimeMillis(),
       (live.recentTags :+ mergeTag).takeRight(MaxRecentTags), b.bloomCols,
       live.constraints, live.renames)
     val content =
@@ -4595,17 +4519,15 @@ object Snapshots {
     * is covered by the retained tagged manifest) and BEFORE the branch
     * drop. */
   private def recordMerge(
-      f: FileSystem, qroot: Path, nonce: String, id: Int): Unit =
-    if (nonce.nonEmpty) {
-      f.mkdirs(mergesDir(qroot))
-      FsOps.atomicWrite(f, new Path(mergesDir(qroot), nonce), s"s$id")
-    }
+      f: FileSystem, qroot: Path, nonce: String, id: Int): Unit = {
+    f.mkdirs(mergesDir(qroot))
+    FsOps.atomicWrite(f, new Path(mergesDir(qroot), nonce), s"s$id")
+  }
 
   /** The main snapshot id a branch incarnation's merge landed at, if its
-    * durable marker exists (pre-nonce branches never have one). */
+    * durable marker exists. */
   private def recordedMergeId(
       f: FileSystem, qroot: Path, nonce: String): Option[Int] = {
-    if (nonce.isEmpty) return None
     val p = new Path(mergesDir(qroot), nonce)
     if (!f.exists(p)) None
     else Some(parseSnapRef(s"merge marker $nonce", readSmall(f, p)))
@@ -4644,8 +4566,7 @@ object Snapshots {
         .find(id => readSnapshotFile(f, qroot, id).batchTag
           .contains(mergeTag))
         .orElse(retained.lastOption.filter(head =>
-          readSnapshotFile(f, qroot, head).effectiveRecentTags
-            .contains(mergeTag)))
+          readSnapshotFile(f, qroot, head).recentTags.contains(mergeTag)))
     }
     taggedMergeId(cur0).foreach { id =>
       dropBranch(spark, root, name); return id
@@ -4741,11 +4662,8 @@ object Snapshots {
           "the current state and replay the writes")
       // the merged contract widens main's current schema by the branch's
       // (the branch may itself have widened since the fork)
-      val contract = (live.schema, bRes.schema) match {
-        case (Some(m), Some(b)) => graft.schema.SchemaEvolution.validate(
-          m, b, live.partitionCols, graft.schema.SchemaEvolution.Widen)
-        case (m, b) => b.orElse(m).getOrElse(StructType(Seq.empty))
-      }
+      val contract = graft.schema.SchemaEvolution.validate(live.schema,
+        bRes.schema, live.partitionCols, graft.schema.SchemaEvolution.Widen)
       val id = cur.get + 1
       // re-anchor in main's CURRENT seq space: every existing equality
       // delete has seq <= cur < id, so none suppresses the rebased rows —
@@ -4753,7 +4671,7 @@ object Snapshots {
       val rebased = branchAdded.map(_.copy(seq = id))
       val meta = SnapMeta("branch_merge", contract, live.format, live.codec,
         live.statsCols, Some(mergeTag), live.partitionCols,
-        Some(System.currentTimeMillis()),
+        System.currentTimeMillis(),
         (live.recentTags :+ mergeTag).takeRight(MaxRecentTags),
         live.bloomCols, live.constraints, live.renames)
       val content =
@@ -4911,7 +4829,7 @@ object Snapshots {
       case -1 => None
       case n => Some(n)
     }
-    (base, parseManifest(base.getOrElse(0) + 1, rest.drop(1)))
+    (base, parseManifest(base.getOrElse(0) + 1, rest.drop(1), p.toString))
   }
 
   /**
@@ -4963,8 +4881,7 @@ object Snapshots {
       prune: Seq[StatRange] = Seq.empty): DataFrame = {
     val (f, qroot) = FsOps.fs(spark, root)
     val (_, head) = readStagedFile(f, qroot, name)
-    readResolved(spark, qroot, resolveFrom(f, qroot, head), prune,
-      s"staged '$name'")
+    readResolved(spark, qroot, resolveFrom(f, qroot, head), prune)
   }
 
   /**
@@ -5075,8 +4992,7 @@ object Snapshots {
     * retaining the current snapshot; tags and staged bases stay pinned
     * exactly as in [[expire]]. Publish instants are monotone in id
     * (single-writer publish order), so the kept set is a suffix and the
-    * count-based machinery applies directly; unstamped legacy manifests
-    * count as older than every stamped one. Returns (expired snapshot
+    * count-based machinery applies directly. Returns (expired snapshot
     * ids, deleted data-file count). */
   def expireOlderThan(
       spark: SparkSession, root: String, tsMillis: Long): (Seq[Int], Int) = {
@@ -5084,7 +5000,7 @@ object Snapshots {
     val cur = currentSnapshot(spark, root)
     val cache = scala.collection.mutable.Map.empty[Int, RawManifest]
     val keep = committedIds(f, qroot, cur).count(id =>
-      readSnapshotFileCached(f, qroot, id, cache).ts.exists(_ >= tsMillis))
+      readSnapshotFileCached(f, qroot, id, cache).ts >= tsMillis)
     expire(spark, root, math.max(keep, 1))
   }
 
@@ -5112,11 +5028,9 @@ object Snapshots {
         val res = resolve(f, qroot, k, cache)
         // rebase-in-place preserves the ORIGINAL publish instant — the
         // rewrite changes representation, not history
-        val meta = SnapMeta(raw.mode,
-          raw.schema.getOrElse(StructType(Seq.empty)), raw.format,
-          raw.codec, raw.statsCols, raw.batchTag, raw.partitionCols, raw.ts,
-          raw.effectiveRecentTags, raw.bloomCols, raw.constraints,
-          raw.renames)
+        val meta = SnapMeta(raw.mode, raw.schema, raw.format, raw.codec,
+          raw.statsCols, raw.batchTag, raw.partitionCols, raw.ts,
+          raw.recentTags, raw.bloomCols, raw.constraints, raw.renames)
         FsOps.atomicWrite(f, new Path(snapshotsDir(qroot), s"s$k"),
           renderManifest(meta, None, Seq.empty, Seq.empty, Some(res.files),
             dFull = res.deletes))

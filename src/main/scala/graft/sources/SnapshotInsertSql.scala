@@ -268,7 +268,7 @@ case class SnapshotStaticInsertCommand(
       case (k, v) if k.equalsIgnoreCase("branch") => v
     }
     val root = GraftCatalog.rootOf(meta, table)
-    val fields = SnapshotSource.recordedPartitioning(session, root)
+    val fields = Snapshots.recordedPartitionCols(session, root)
     val schema = Snapshots.tableSchema(session, root)
     val resolver = session.sessionState.conf.resolver
     // canonicalize spec names to the recorded field spelling; non-

@@ -304,16 +304,8 @@ class SnapshotSource extends RelationProvider with SchemaRelationProvider
         .digest(qualified.getBytes("UTF-8"))
       digest.take(6).map(b => f"$b%02x").mkString
     }
-    val legacyMigration = byLower.get("legacytagmigration")
-      .map(_.trim.toLowerCase) match {
-      case None => false
-      case Some("true") => true
-      case Some("false") => false
-      case Some(other) => throw new IllegalArgumentException(
-        s"legacyTagMigration must be true|false, got '$other'")
-    }
     new SnapshotStreamSink(sqlContext, o.root, queryTag, fields,
-      o.statsColumns, o.bloomColumns, legacyMigration)
+      o.statsColumns, o.bloomColumns)
   }
 
   /** `df.write.format("graft-snapshot")` — lands one snapshot through
@@ -341,7 +333,7 @@ class SnapshotSource extends RelationProvider with SchemaRelationProvider
           "plain appends/overwrites (fastForward publishes them)")
       require(Snapshots.branchHeadId(spark, root, b).isDefined,
         s"no branch '$b' under $root — Snapshots.createBranch first")
-      val fields = SnapshotSource.recordedPartitioning(spark, root)
+      val fields = Snapshots.recordedPartitionCols(spark, root)
       val m = mode match {
         case SaveMode.Append => Snapshots.SnapAppend
         case SaveMode.Overwrite => Snapshots.SnapOverwritePartitions
@@ -353,7 +345,7 @@ class SnapshotSource extends RelationProvider with SchemaRelationProvider
     }
     val fields = existing match {
       case Some(_) =>
-        val recorded = SnapshotSource.recordedPartitioning(spark, root)
+        val recorded = Snapshots.recordedPartitionCols(spark, root)
         require(o.partitionBy.isEmpty || o.partitionBy == recorded,
           s"dataset at $root is partitioned by ${recorded.mkString(",")}; " +
             s"cannot write under ${o.partitionBy.mkString(",")}")
@@ -444,17 +436,6 @@ object SnapshotSource {
     // admitting a snapshot published just after the requested bound
     Math.floorDiv(micros.asInstanceOf[Long], 1000L)
   }
-
-  /** The partition spec the dataset records (the current manifest's
-    * `partitionby=` line) — what `INSERT INTO` writes route under. */
-  private[sources] def recordedPartitioning(
-      spark: org.apache.spark.sql.SparkSession, root: String): Seq[String] = {
-    val spec = Snapshots.recordedPartitionCols(spark, root)
-    require(spec.nonEmpty,
-      s"dataset at $root predates recorded partition specs — one write " +
-        "through the Snapshots API pins it before SQL inserts can route")
-    spec
-  }
 }
 
 class SnapshotRelation(
@@ -520,10 +501,9 @@ class SnapshotRelation(
   @volatile private var sizeMemo: Option[(Option[Int], Long)] = None
 
   /** Recorded live byte size from the manifest (no filesystem walk), so
-    * Catalyst can broadcast a small snapshot table; datasets predating
-    * byte recording (and branch-pinned relations, whose audit reads are
-    * not join-planning-sensitive) fall back to the conservative session
-    * default. */
+    * Catalyst can broadcast a small snapshot table; branch-pinned
+    * relations, whose audit reads are not join-planning-sensitive, fall
+    * back to the conservative session default. */
   override def sizeInBytes: Long = {
     if (branch.isDefined) return super.sizeInBytes
     val cur = pinnedId.orElse(Snapshots.currentSnapshot(spark, root))
@@ -531,7 +511,6 @@ class SnapshotRelation(
       case Some((id, bytes)) if id == cur => bytes
       case _ =>
         val bytes = Snapshots.liveDataBytes(spark, root, cur)
-          .getOrElse(super.sizeInBytes)
         sizeMemo = Some((cur, bytes))
         bytes
     }
@@ -553,7 +532,7 @@ class SnapshotRelation(
     require(asOf.isEmpty && tag.isEmpty,
       "cannot INSERT into a time-travel-pinned (asOf/tag) table — it is " +
         "a read-only view of history")
-    val fields = SnapshotSource.recordedPartitioning(spark, root)
+    val fields = Snapshots.recordedPartitionCols(spark, root)
     val mode =
       if (overwrite) Snapshots.SnapOverwritePartitions
       else Snapshots.SnapAppend

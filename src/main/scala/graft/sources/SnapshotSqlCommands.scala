@@ -3,7 +3,7 @@ package graft.sources
 import graft.sink.Snapshots
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeReference, AttributeSet, EqualTo, Expression, InSubquery, ListQuery, SubqueryExpression}
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeReference, AttributeSet, CommonExpressionRef, EqualTo, Expression, InSubquery, ListQuery, RuntimeReplaceable, SubqueryExpression, With}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
@@ -145,6 +145,22 @@ private[sources] object GraftCatalog {
 
 private[sources] object SnapshotDml {
 
+  /** An analyzed expression in a shape the engine can analyse again.
+    * Analysis rewrites some expressions (`BETWEEN`) into a runtime-
+    * replaceable wrapper over a `With` common-subexpression node, which
+    * fails when re-analysed; the wrapper gives way to its replacement
+    * and each `With` is inlined, so `k BETWEEN a AND b` reaches the
+    * engine as `k >= a AND k <= b` and prunes exactly like it. */
+  def reanalysable(e: Expression): Expression =
+    e.transformDown {
+      case r: RuntimeReplaceable if r.replacement.exists(_.isInstanceOf[With]) =>
+        r.replacement
+    }.transformUp {
+      case With(child, defs) =>
+        val byId = defs.map(d => d.id -> d.child).toMap
+        child.transform { case ref: CommonExpressionRef => byId(ref.id) }
+    }
+
   /** Catalyst → Column with attributes unresolved back to bare names
     * (unique within the flat recorded contract, so the name round-trip
     * is lossless) and literals kept internal. */
@@ -153,7 +169,7 @@ private[sources] object SnapshotDml {
       s"$what with a subquery is not supported on snapshot tables — " +
         "materialize the subquery (e.g. into an IN-list or a MERGE " +
         "source) first")
-    GraftSqlBridge.column(e.transform {
+    GraftSqlBridge.column(reanalysable(e).transform {
       case a: AttributeReference => UnresolvedAttribute.quoted(a.name)
     })
   }
@@ -345,7 +361,7 @@ private[sources] object SnapshotDml {
       require(!e.exists(_.isInstanceOf[SubqueryExpression]),
         s"$what with a subquery is not supported on snapshot tables — " +
           "materialize it into the MERGE source first")
-      GraftSqlBridge.column(e.transform {
+      GraftSqlBridge.column(SnapshotDml.reanalysable(e).transform {
         // source-side references resolve against the join frame's
         // prefixed copies — collision-free when both sides share names
         case a: AttributeReference if sOut.contains(a) =>

@@ -35,8 +35,7 @@ import org.apache.spark.sql.execution.streaming.Sink
 class SnapshotStreamSink(
     sqlContext: SQLContext, root: String, queryTag: String,
     partitionBy: Seq[String],
-    statsColumns: Seq[String], bloomColumns: Seq[String],
-    legacyTagMigration: Boolean = false) extends Sink {
+    statsColumns: Seq[String], bloomColumns: Seq[String]) extends Sink {
 
   override def addBatch(batchId: Long, data: DataFrame): Unit = {
     val spark = sqlContext.sparkSession
@@ -47,7 +46,7 @@ class SnapshotStreamSink(
     if (batch.isEmpty) return
     val fields = Snapshots.currentSnapshot(spark, root) match {
       case Some(_) =>
-        val recorded = SnapshotSource.recordedPartitioning(spark, root)
+        val recorded = Snapshots.recordedPartitionCols(spark, root)
         require(partitionBy.isEmpty || partitionBy == recorded,
           s"dataset at $root is partitioned by ${recorded.mkString(",")}; " +
             s"cannot stream under ${partitionBy.mkString(",")}")
@@ -57,24 +56,6 @@ class SnapshotStreamSink(
           "creating a snapshot dataset through the stream sink needs " +
             "partitionBy (comma-separated partition fields)")
         partitionBy
-    }
-    // upgrade migration — OPT-IN (`legacyTagMigration` on the restart
-    // that continues a PRE-query-scoping checkpoint): a checkpoint
-    // running before tags were query-scoped wrote bare
-    // `stream-<batchId>` tags; its crash-replay arrives here
-    // post-upgrade and must still converge. Only honored while NO
-    // scoped tag of THIS lineage exists in the window — once this query
-    // has published under the scoped scheme, a bare legacy tag is some
-    // other (pre-upgrade) query's history. NOT the default, because a
-    // bare tag names no lineage: a NEW query against a root holding
-    // another query's legacy tags would have its real batches silently
-    // converged as redeliveries — data loss — whenever its batch ids
-    // collide with the window. Default-off trades that silent loss for
-    // a documented one-flag migration step.
-    if (legacyTagMigration) {
-      val window = Snapshots.recentReplayTags(spark, root)
-      if (window.contains(s"stream-$batchId") &&
-          !window.exists(_.startsWith(s"stream-$queryTag-"))) return
     }
     Snapshots.write(batch, root, fields, Snapshots.SnapAppend,
       statsColumns = statsColumns, bloomColumns = bloomColumns,

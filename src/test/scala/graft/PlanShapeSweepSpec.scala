@@ -21,6 +21,32 @@ package graft
  */
 class PlanShapeSweepSpec extends SparkSpec {
 
+  /** Every registered query planned ONCE: its physical plan string, or
+    * why it failed to plan. All three sweeps and the allowlist-tightness
+    * checks read these same plans. */
+  private lazy val plans: Seq[(String, Either[String, String])] =
+    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      name -> (try Right(fn(spark, sf0001).queryExecution.executedPlan.toString)
+      catch {
+        case e: Throwable =>
+          Left(s"$name failed to plan: ${e.getClass.getSimpleName} ${e.getMessage}")
+      })
+    }
+
+  private def planOf(name: String): String =
+    plans.collectFirst { case (`name`, p) => p }
+      .getOrElse(fail(s"$name is not a registered query"))
+      .fold(fail(_), identity)
+
+  /** One sweep: `check` on every non-exempt plan, plus planning failures. */
+  private def sweep(exempt: String => Boolean)(
+      check: (String, String) => Seq[String]): Seq[String] =
+    plans.flatMap {
+      case (name, _) if exempt(name) => Nil
+      case (_, Left(failure)) => Seq(failure)
+      case (name, Right(plan)) => check(name, plan)
+    }
+
   /** Labeled exact twins and baselines — the documented cartesian carriers:
     * brute-force/heap/int8 top-k and exact embedding pairs (COVERAGE.md
     * "labeled exact-scoring baseline" rows). */
@@ -29,18 +55,10 @@ class PlanShapeSweepSpec extends SparkSpec {
     "dedup_embedding_pairs")
 
   test("no unlabeled CartesianProduct anywhere in the query surface") {
-    val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, _) if cartesianAllowed(name) => None
-      case (name, fn) =>
-        try {
-          val plan = fn(spark, sf0001).queryExecution.executedPlan.toString
-          if (plan.contains("CartesianProduct"))
-            Some(s"$name plans a CartesianProduct")
-          else None
-        } catch {
-          case e: Throwable =>
-            Some(s"$name failed to plan: ${e.getClass.getSimpleName} ${e.getMessage}")
-        }
+    val failures = sweep(cartesianAllowed) { (name, plan) =>
+      if (plan.contains("CartesianProduct"))
+        Seq(s"$name plans a CartesianProduct")
+      else Nil
     }
     assert(failures.isEmpty, failures.mkString("\n"))
   }
@@ -99,26 +117,16 @@ class PlanShapeSweepSpec extends SparkSpec {
   }
 
   test("no unbounded Exchange SinglePartition anywhere in the query surface") {
-    val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, _) if singlePartitionAllowed.contains(name) => None
-      case (name, fn) =>
-        try {
-          val plan = fn(spark, sf0001).queryExecution.executedPlan.toString
-          unboundedSinglePartitions(plan)
-            .map(p => s"$name funnels into SinglePartition under: $p")
-        } catch {
-          case e: Throwable =>
-            Some(s"$name failed to plan: ${e.getClass.getSimpleName} ${e.getMessage}")
-        }
+    val failures = sweep(singlePartitionAllowed.contains) { (name, plan) =>
+      unboundedSinglePartitions(plan)
+        .map(p => s"$name funnels into SinglePartition under: $p")
     }
     assert(failures.isEmpty, failures.mkString("\n"))
   }
 
   test("the SinglePartition allowlist is tight") {
     singlePartitionAllowed.keys.foreach { name =>
-      val plan = SparkEntry.queries(name)(spark, sf0001)
-        .queryExecution.executedPlan.toString
-      assert(unboundedSinglePartitions(plan).nonEmpty,
+      assert(unboundedSinglePartitions(planOf(name)).nonEmpty,
         s"$name no longer plans a non-aggregate SinglePartition exchange; " +
           "remove it from the allowlist")
     }
@@ -145,27 +153,18 @@ class PlanShapeSweepSpec extends SparkSpec {
         "(vec_id === queryVecId); the corpus side streams once"))
 
   test("every BroadcastNestedLoopJoin sits on the bounded-side allowlist") {
-    val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, _) if bnljAllowed.contains(name) || cartesianAllowed(name) => None
-      case (name, fn) =>
-        try {
-          val plan = fn(spark, sf0001).queryExecution.executedPlan.toString
-          if (plan.contains("BroadcastNestedLoopJoin"))
-            Some(s"$name plans an unlabeled BroadcastNestedLoopJoin")
-          else None
-        } catch {
-          case e: Throwable =>
-            Some(s"$name failed to plan: ${e.getClass.getSimpleName} ${e.getMessage}")
-        }
-    }
+    val failures =
+      sweep(n => bnljAllowed.contains(n) || cartesianAllowed(n)) { (name, plan) =>
+        if (plan.contains("BroadcastNestedLoopJoin"))
+          Seq(s"$name plans an unlabeled BroadcastNestedLoopJoin")
+        else Nil
+      }
     assert(failures.isEmpty, failures.mkString("\n"))
   }
 
   test("the BNLJ allowlist is tight: each listed query really plans one") {
     bnljAllowed.keys.foreach { name =>
-      val plan = SparkEntry.queries(name)(spark, sf0001)
-        .queryExecution.executedPlan.toString
-      assert(plan.contains("BroadcastNestedLoopJoin"),
+      assert(planOf(name).contains("BroadcastNestedLoopJoin"),
         s"$name no longer plans a BroadcastNestedLoopJoin; remove it " +
           "from the allowlist")
     }
@@ -175,8 +174,7 @@ class PlanShapeSweepSpec extends SparkSpec {
     // if a twin is later rewritten bucketed, it must leave the allowlist —
     // a stale allowlist would mask a future regression under its name
     cartesianAllowed.foreach { name =>
-      val plan = SparkEntry.queries(name)(spark, sf0001)
-        .queryExecution.executedPlan.toString
+      val plan = planOf(name)
       assert(plan.contains("CartesianProduct") ||
         plan.contains("BroadcastNestedLoopJoin"),
         s"$name no longer plans all-pairs; remove it from the allowlist")

@@ -3,8 +3,9 @@ package graft
 /** The schema cache must never serve a stale schema for a path whose
   * file was regenerated mid-JVM (the ADVICE staleness hazard: the
   * driver has shipped events.parquet under different ts layouts across
-  * rounds). The cache keys on (path, mtime, length), so a rewrite at
-  * the same path re-infers. */
+  * rounds). Each path's entry is stamped with the file's (mtime,
+  * length), so a rewrite at the same path re-infers — and replaces the
+  * superseded entry instead of adding one per regeneration. */
 class TablesSpec extends SparkSpec {
 
   test("schema cache re-infers when the file at a path is regenerated") {
@@ -14,6 +15,7 @@ class TablesSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$dir/t.parquet")
     val first = Tables(spark, dir, "t").schema
     assert(first.fieldNames.toSeq == Seq("k", "v"))
+    val entries = Tables.schemaCacheSize
     // regenerate the SAME path with a different schema; nudge mtime in
     // case the filesystem's timestamp granularity would collapse the two
     Seq((1L, "a", 2.5)).toDF("k", "v", "w").coalesce(1)
@@ -23,5 +25,7 @@ class TablesSpec extends SparkSpec {
     val second = Tables(spark, dir, "t").schema
     assert(second.fieldNames.toSeq == Seq("k", "v", "w"),
       "a regenerated file must re-infer, not serve the stale schema")
+    assert(Tables.schemaCacheSize == entries,
+      "the regenerated file's entry must replace the superseded one")
   }
 }

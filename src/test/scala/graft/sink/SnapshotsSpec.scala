@@ -1473,7 +1473,7 @@ class SnapshotsSpec extends SparkSpec {
       == Seq(Some(5L)), "n_rows must come from per-file manifest counts")
     assert(log1.forall(r => r.getLong(10) > 0L),
       "n_bytes must come from per-file manifest lengths")
-    assert(Snapshots.liveDataBytes(spark, root).exists(_ > 0L))
+    assert(Snapshots.liveDataBytes(spark, root) > 0L)
     // IS NULL skipping: the null-free file (partition a) is pruned
     assert(Snapshots.read(spark, root,
       prune = Seq(Snapshots.StatRange("v", nullness = Some(true))))
@@ -2882,27 +2882,67 @@ class SnapshotsSpec extends SparkSpec {
     assert(Snapshots.read(spark, root).count() == 20)
   }
 
-  test("snapshotAt treats pre-timestamp manifests as older than every stamped one") {
+  test("a manifest in any other format fails to read by name; the prior snapshot stays readable") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("snap_ts_leg").toString
+    val root = java.nio.file.Files.createTempDirectory("snap_fmt").toString
     Snapshots.write(Seq((1L, "a")).toDF("k", "p"), root, Seq("p"))
-    // strip s1's ts line in place — a dataset written before instants
-    val p1 = java.nio.file.Paths.get(s"$root/snapshots/s1")
-    val legacy = new String(java.nio.file.Files.readAllBytes(p1))
-      .linesIterator.filterNot(_.startsWith("ts=")).mkString("", "\n", "\n")
-    java.nio.file.Files.write(p1, legacy.getBytes)
-    // the raw rewrite invalidates the local FS's checksum sidecar
-    java.nio.file.Files.deleteIfExists(
-      java.nio.file.Paths.get(s"$root/snapshots/.s1.crc"))
-    val t1 = System.currentTimeMillis()
-    Thread.sleep(5)
-    Snapshots.write(Seq((2L, "a")).toDF("k", "p"), root, Seq("p"))
-    // before s2's stamp: the stamped head disqualifies, the legacy
-    // manifest resolves (it is older than every stamped one by
-    // construction)
-    assert(Snapshots.snapshotAt(spark, root, t1).contains(1))
-    assert(Snapshots.readAt(spark, root, t1).count() == 1)
-    assert(Snapshots.snapshotAt(spark, root, Long.MaxValue).contains(2))
+    Snapshots.write(Seq((2L, "b")).toDF("k", "p"), root, Seq("p"))
+    val v3 = manifestText(root, 2)
+    assert(v3.startsWith("graftsnap=3\n"), v3)
+    def rewriteS2(text: String): Unit = {
+      java.nio.file.Files.write(java.nio.file.Paths.get(s"$root/snapshots/s2"),
+        text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      // the raw rewrite invalidates the local FS's checksum sidecar
+      java.nio.file.Files.deleteIfExists(
+        java.nio.file.Paths.get(s"$root/snapshots/.s2.crc"))
+    }
+    val lines = v3.linesIterator.toSeq
+    def unlines(ls: Seq[String]) = ls.mkString("", "\n", "\n")
+    // the version-1 shape: mode line, schema line, bare file paths
+    val positional = unlines(
+      lines.filter(l => l.startsWith("mode=") || l.startsWith("schema=")) ++
+        lines.filter(_.startsWith("add="))
+          .map(_.stripPrefix("add=").takeWhile(_ != '\t')))
+    val cases = Seq(
+      ("a graftsnap=2 manifest", v3.replaceFirst("graftsnap=3", "graftsnap=2"),
+        "is format 2; this engine reads only format 3"),
+      ("a positional manifest", positional,
+        "is format 1 (no graftsnap header); this engine reads only format 3"),
+      ("a manifest without ts=", unlines(lines.filterNot(_.startsWith("ts="))),
+        "missing ts= line"),
+      // headerless text that does not open like format 1 is damage
+      ("an empty manifest", "", "corrupt snapshot manifest"),
+      ("a truncated header", "graftsn", "corrupt snapshot manifest"),
+      ("a manifest without its header", unlines(lines.tail.filterNot(
+        _.startsWith("mode="))), "corrupt snapshot manifest"))
+    cases.foreach { case (what, text, expected) =>
+      rewriteS2(text)
+      val e = intercept[IllegalStateException](Snapshots.read(spark, root))
+      assert(e.getMessage.contains(expected) &&
+        e.getMessage.contains("snapshots/s2"), s"$what: ${e.getMessage}")
+      assert(Snapshots.currentSnapshot(spark, root).contains(2),
+        s"$what: the pointer must not move")
+      assert(Snapshots.read(spark, root, asOf = Some(1))
+        .as[(Long, String)].collect().toSeq == Seq((1L, "a")),
+        s"$what: the prior snapshot must stay readable")
+    }
+    rewriteS2(v3)
+    assert(Snapshots.read(spark, root).count() == 2)
+  }
+
+  test("UPDATE re-checks its targets against the contract the rewrite resolved") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.lit
+    // the rows a rewrite reads after a RENAME COLUMN v -> w landed
+    // between the up-front target check and the manifest resolve
+    val renamed = Seq((1L, 10L)).toDF("k", "w")
+    val e = intercept[IllegalArgumentException](
+      Snapshots.assignWhere(renamed, renamed, lit(true), Map("v" -> lit(0L))))
+    assert(e.getMessage.contains("unknown UPDATE target column 'v'"),
+      e.getMessage)
+    val kept = Snapshots.assignWhere(renamed, renamed, lit(true),
+      Map("w" -> lit(0L))).as[(Long, Long)].collect().toSeq
+    assert(kept == Seq((1L, 0L)))
   }
 
   test("expire and vacuum account for equality-delete files") {

@@ -52,6 +52,41 @@ class SnapshotDmlSpec extends SparkSpec {
     spark.sql("DROP TABLE dml_del_tbl")
   }
 
+  test("BETWEEN in DELETE and UPDATE matches the >= / <= form in rows and pruning") {
+    def table(name: String): String = {
+      val root = java.nio.file.Files.createTempDirectory(name).toString
+      // four files with disjoint key ranges: stat pruning separates them
+      (0 until 4).foreach { i =>
+        Snapshots.write(spark.range(i * 50, i * 50 + 50)
+          .select(col("id").as("k"), (col("id") * 10).as("v"),
+            lit("a").as("p")).coalesce(1), root, Seq("p"),
+          statsColumns = if (i == 0) Seq("k") else Seq.empty)
+      }
+      spark.sql(s"DROP TABLE IF EXISTS $name")
+      Snapshots.registerTable(spark, root, name)
+      root
+    }
+    val between = table("dml_between")
+    val ranged = table("dml_ranged")
+    def rows(t: String): Set[(Long, Long)] =
+      spark.sql(s"SELECT k, v FROM $t").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+    spark.sql("DELETE FROM dml_between WHERE k BETWEEN 60 AND 80")
+    spark.sql("DELETE FROM dml_ranged WHERE k >= 60 AND k <= 80")
+    assert(rows("dml_between") == rows("dml_ranged"))
+    assert(rows("dml_between").size == 179)
+    assert(manifestRemoves(between, 5) == 1 && manifestRemoves(ranged, 5) == 1,
+      "BETWEEN must prune to the one file the >= / <= form rewrites")
+    spark.sql("UPDATE dml_between SET v = v + 1 WHERE k BETWEEN 120 AND 130")
+    spark.sql("UPDATE dml_ranged SET v = v + 1 WHERE k >= 120 AND k <= 130")
+    assert(rows("dml_between") == rows("dml_ranged"))
+    assert(rows("dml_between").count(_._2 % 10 == 1) == 11)
+    assert(manifestRemoves(between, 6) == 1 && manifestRemoves(ranged, 6) == 1,
+      "BETWEEN must prune to the one file the >= / <= form rewrites")
+    spark.sql("DROP TABLE dml_between")
+    spark.sql("DROP TABLE dml_ranged")
+  }
+
   test("DELETE with an IN-subquery: small sets inline as Bloom-pruned IN-lists, large sets take the semi-join lane") {
     val root = java.nio.file.Files.createTempDirectory("dml_delsub").toString
     // two files with interleaved key ranges: only Bloom/IN pruning

@@ -162,66 +162,6 @@ class SnapshotStreamSpec extends SparkSpec {
     }
   }
 
-  test("upgrade migration: legacy stream-<batchId> tags converge replays until the scoped lineage exists") {
-    val src = java.nio.file.Files.createTempDirectory("slegacy_src").toString
-    val dst = java.nio.file.Files.createTempDirectory("slegacy_dst").toString
-    val k = col("o_orderkey")
-    Snapshots.write(orders.filter(k % 2 === 0).coalesce(1), src,
-      Seq("o_orderpriority"))
-    // the dataset state a PRE-upgrade sink left behind: batch 0 landed
-    // under the old un-scoped tag, then the job crashed before its
-    // offset commit — the restart (now upgraded) replays batch 0
-    Snapshots.write(orders.filter(k % 2 === 0).coalesce(1), dst,
-      Seq("o_orderpriority"), batchTag = Some("stream-0"))
-    val before = Snapshots.currentSnapshot(spark, dst)
-    // the upgrade continues the SAME checkpoint (that is what makes the
-    // replay a replay) — with the migration flag set for the restart,
-    // the documented one-flag upgrade recipe. The flag is OPT-IN: a
-    // bare legacy tag names no lineage, so honoring it by default would
-    // silently converge a NEW query's real batches (data loss) whenever
-    // its batch ids collide with another query's pre-upgrade window.
-    val cp = java.nio.file.Files.createTempDirectory("slegacy_cp").toString
-    def run(migration: Boolean): Unit = {
-      val q = spark.readStream.format("graft-snapshot").load(src)
-        .writeStream.format("graft-snapshot")
-        .option("checkpointLocation", cp)
-        .option("legacyTagMigration", migration.toString)
-        .partitionBy("o_orderpriority")
-        .start(dst)
-      try { q.processAllAvailable() } finally q.stop()
-    }
-    run(migration = true)
-    assert(Snapshots.currentSnapshot(spark, dst) == before,
-      "the replayed batch 0 must converge on its LEGACY tag, not " +
-        "double-append the pre-upgrade landing")
-    // once past the replay the scoped lineage takes over: the next batch
-    // lands under the scoped tag, and from then on bare legacy tags are
-    // other queries' history
-    Snapshots.write(orders.filter(k % 2 === 1).coalesce(1), src,
-      Seq("o_orderpriority"), Snapshots.SnapAppend)
-    run(migration = false)
-    assert(keysOf(Snapshots.read(spark, dst)) == keysOf(orders),
-      "post-migration batches land under the scoped scheme")
-    assert(Snapshots.read(spark, dst).count() == orders.count())
-    // the default-off guarantee: a NEW query (fresh checkpoint) against
-    // a root still holding legacy tags must LAND its batch 0 — before
-    // the opt-in gate, the bare `stream-0` in the window silently
-    // swallowed it
-    val dst2 = java.nio.file.Files.createTempDirectory("slegacy_d2").toString
-    Snapshots.write(orders.filter(k % 2 === 0).coalesce(1), dst2,
-      Seq("o_orderpriority"), batchTag = Some("stream-0"))
-    val cp2 = java.nio.file.Files.createTempDirectory("slegacy_c2").toString
-    val q2 = spark.readStream.format("graft-snapshot").load(src)
-      .writeStream.format("graft-snapshot")
-      .option("checkpointLocation", cp2)
-      .partitionBy("o_orderpriority")
-      .start(dst2)
-    try { q2.processAllAvailable() } finally q2.stop()
-    assert(Snapshots.read(spark, dst2).count() > orders.filter(k % 2 === 0).count(),
-      "a new query's batch 0 must never be swallowed by another " +
-        "query's legacy tag")
-  }
-
   test("maxRowsPerTrigger / maxBytesPerTrigger bound catch-up by manifest-recorded size") {
     val root = java.nio.file.Files.createTempDirectory("srows_src").toString
     val mirror = java.nio.file.Files.createTempDirectory("srows_mir").toString
